@@ -4,12 +4,11 @@
 reason to exist) on the deterministic synthetic image table — the
 input-table contract says to synthesize the image+caption table at
 small scale (BASELINE.json input_hint; no external data exists for
-it). ``queries()`` exposes every implemented operator from SURVEY.md
-§2 plus the training-data-pipeline operators; SQL-expressible ones
-carry a DuckDB oracle in ``oracle_sql()`` (identical aliases, rounded
-float aggregates so value hashes match across engines); spatial /
-hash-based ones are rows-only and are verified against numpy oracles
-in tests/.
+it). ``queries()`` exposes the paper's operators from SURVEY.md §2;
+SQL-expressible ones carry a DuckDB oracle in ``oracle_sql()``
+(identical aliases, rounded float aggregates so value hashes match
+across engines); the geometry surfaces are rows-only and are verified
+against numpy oracles in tests/.
 """
 
 from __future__ import annotations
@@ -204,104 +203,17 @@ def _q_a1_persistence(spark, sf):  # A1 pixel persistence analog
     )
 
 
-def _q_a2_cond_avg(spark, sf):
-    """A2 pp_mean analog: avg over threshold. Retired from the driver
-    board in r7 to hold the 50-entry cap while html_text joined: the
-    conditional-avg shape is computed inside the hash-green a7_fold
-    (and the flagship numpy-parity pytest pins the real pp_mean), so
-    the slot went to an operator with engine code behind it. Stays
-    callable and pinned by tests/test_scale_ops.py against
-    A2_RETIRED_SQL."""
+def _q_a2_cond_avg(spark, sf):  # A2 pp_mean analog: avg over threshold
     e = _t(spark, sf, "events")
     return e.groupBy("event_type").agg(
         F.round(F.avg(F.when(F.col("value") > 50, F.col("value"))), 6).alias("avg_above_50")
     )
 
 
-A2_RETIRED_SQL = """
-    SELECT event_type, ROUND(AVG(CASE WHEN value > 50 THEN value END), 6) AS avg_above_50
-    FROM events GROUP BY event_type
-"""
-
-
-def _q_html_text(spark, sf):
-    """HTML -> text extraction (operators/htmltext.py, SURVEY §2.12
-    L34) — generated-markup-through-real-parser: each document body is
-    wrapped in full page chrome (head/title/script with embedded fake
-    tags, nav + footer anchor blocks, a comment, an &amp; entity), the
-    REAL single-pass parser + link-density boilerplate cut strips it,
-    and the expected output is SQL-derivable because the corpus text
-    is verified single-spaced ASCII: the title block ('t') falls to
-    min_block_chars, nav (density 1.0) and footer (0.92) fall to the
-    0.4 link-density cut, leaving exactly the h1 source and the body
-    paragraph -> kept=2, dropped=3, text = source \\n body ' & more'."""
-    from irivermetrics_spark.operators import htmltext
-
-    d = _t(spark, sf, "documents").select("doc_id", "text", "source")
-    pages = d.select(
-        "doc_id",
-        F.concat(
-            F.lit("<html><head><title>t</title><script>var a = '<p>x</p>';"
-                  "</script></head><body><nav><a href='/'>Home</a> "
-                  "<a href='/a'>About</a> <a href='/c'>Contact</a></nav>"
-                  "<h1>"),
-            F.col("source"),
-            F.lit("</h1><p>"),
-            F.col("text"),
-            F.lit(" &amp; more</p><!-- hidden <p>no</p> --><footer>"
-                  "<a href='/t'>Terms</a> | <a href='/p'>Privacy</a>"
-                  "</footer></body></html>"),
-        ).alias("html"))
-    out = htmltext.with_html_text(pages)
-    return out.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.col("text").alias("extracted"),
-        F.col("html_blocks_kept").cast("bigint").alias("blocks_kept"),
-        F.col("html_blocks_dropped").cast("bigint").alias("blocks_dropped"),
-    )
-
-
-def _q_a3_cond_sum(spark, sf):
-    """A3 ra_area analog: scaled conditional sum. Retired from the
-    driver board in r7 to hold the 50-entry cap while bpe_tokens
-    joined: the conditional-sum shape is redundant with a7_fold (whose
-    fold computes the same CASE-gated sums inside the hash-green
-    flagship metrics) and a2_cond_avg. Stays callable and pinned by
-    tests/test_scale_ops.py against A3_RETIRED_SQL."""
+def _q_a3_cond_sum(spark, sf):  # A3 ra_area analog: scaled conditional sum
     e = _t(spark, sf, "events")
     return e.groupBy("event_type").agg(
         F.round(F.coalesce(F.sum(F.when(F.col("value") > 90, F.col("value"))), F.lit(0.0)) * 1e-4, 6).alias("ra_sum")
-    )
-
-
-A3_RETIRED_SQL = """
-    SELECT event_type,
-           ROUND(COALESCE(SUM(CASE WHEN value > 90 THEN value END), 0.0) * 1e-4, 6) AS ra_sum
-    FROM events GROUP BY event_type
-"""
-
-
-def _q_bpe_tokens(spark, sf):
-    """Trained byte-level BPE (operators/bpe.py, SURVEY §2.12 L33)
-    through the REAL distributed train (word-frequency groupBy) + the
-    REAL mapInPandas merge-loop encoder — generated-data-through-real-
-    kernel trick: the corpus is 'ab'*(doc_id%9+1) built from the
-    documents ids, on which the trained merge table is provably
-    [(97,98)->256 'ab', (256,256)->257 'abab'] (pair (a,b) strictly
-    outnumbers (b,a); after merge 1 only (256,256) adjacencies exist),
-    so encoding 'ab'*n yields [257]*(n//2)+[256]*(n%2) and the DuckDB
-    oracle is pure integer arithmetic + string repeat."""
-    from irivermetrics_spark.operators import bpe
-
-    d = _t(spark, sf, "documents").select("doc_id").orderBy("doc_id").limit(30)
-    corpus = d.withColumn(
-        "text", F.expr("repeat('ab', CAST(doc_id % 9 + 1 AS INT))"))
-    model = bpe.train_bpe(corpus, vocab_size=258)
-    out = bpe.with_bpe_tokens(corpus, model)
-    return out.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.col("bpe_n_tokens").cast("bigint").alias("n_tokens"),
-        F.concat_ws(",", F.col("bpe_ids")).alias("ids_str"),
     )
 
 
@@ -341,13 +253,7 @@ def _q_w2_topk(spark, sf):  # W2 top-k per group
     )
 
 
-def _q_o2_rank(spark, sf):
-    """O2 sort/rank. Retired from the driver board in r7 to hold the
-    50-entry cap while url_normalize joined: the ordered-rank shape is
-    already exercised by the hash-green w2_topk (window rank) and
-    a7_fold (ordered fold), so the slot went to an operator with engine
-    code behind it. Stays callable and pinned by
-    tests/test_scale_ops.py against O2_RETIRED_SQL."""
+def _q_o2_rank(spark, sf):  # O2 sort/rank
     from pyspark.sql import Window
 
     s = _t(spark, sf, "supplier")
@@ -359,58 +265,7 @@ def _q_o2_rank(spark, sf):
     )
 
 
-O2_RETIRED_SQL = """
-    SELECT CAST(s_suppkey AS BIGINT) AS suppkey,
-           CAST(s_nationkey AS BIGINT) AS nationkey,
-           CAST(DENSE_RANK() OVER (PARTITION BY s_nationkey ORDER BY s_acctbal DESC) AS BIGINT) AS bal_rank
-    FROM supplier
-"""
-
-
-def _q_url_normalize(spark, sf):
-    """URL normalization + registered-domain extraction
-    (operators/urlops.py, SURVEY §2.12 L36) — generated-URLs-through-
-    the-real-operator: five deterministic templates per doc_id cover
-    uppercase scheme/host, default-port strip, userinfo strip,
-    tracking-param drop + bytewise param sort, kept empty-value
-    params, non-http schemes, multi-label public suffixes (co.uk),
-    empty-path '/', fragments, and unparseable rows. The oracle
-    rebuilds the same strings with independent CASE arithmetic —
-    no regex shared between the two sides."""
-    from irivermetrics_spark.operators import urlops
-
-    d = _t(spark, sf, "documents").select("doc_id")
-    t = F.col("doc_id") % 5
-    k = (F.col("doc_id") % 7).cast("string")
-    m = (F.col("doc_id") % 10).cast("string")
-    url = (
-        F.when(t == 0, F.concat(F.lit("HTTP://WWW.Site"), k, F.lit(".COM:80/A/"),
-                                F.col("doc_id").cast("string"),
-                                F.lit("?utm_source=feed&b=2&a="), m, F.lit("#frag")))
-        .when(t == 1, F.concat(F.lit("https://user:pw@Shop"), k,
-                               F.lit(".Example.CO.UK:8443/p?z=9&y=&gclid=x")))
-        .when(t == 2, F.concat(F.lit("ftp://files.host"), k, F.lit(".org/pub")))
-        .when(t == 3, F.concat(F.lit("not a url "), F.col("doc_id").cast("string")))
-        .otherwise(F.concat(F.lit("http://BARE.HOST"), k))
-    )
-    out = urlops.with_url_parts(d.select("doc_id", url.alias("url")))
-    return out.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.col("url_valid").alias("valid"),
-        F.col("url_scheme").alias("scheme"),
-        F.col("url_host").alias("host"),
-        F.col("url_registered_domain").alias("reg_domain"),
-        F.col("url_norm"),
-    )
-
-
 def _q_u1_union(spark, sf):  # U1 union + distinct
-    """Retired from the driver board in r6 to hold the 50-entry cap
-    while c4_line_dedup joined: a plain union/distinct/count exercises
-    only Catalyst built-ins (U1 frame concat is also load-bearing
-    inside the hash-green flagship unions), so the slot went to an
-    operator with engine code behind it. Stays callable and pinned by
-    tests/test_scale_ops.py against U1_RETIRED_SQL."""
     c = _t(spark, sf, "customer")
     a = c.filter(F.col("c_mktsegment") == "BUILDING").select("c_custkey", "c_nationkey")
     b = c.filter(F.col("c_acctbal") > 5000).select("c_custkey", "c_nationkey")
@@ -419,49 +274,6 @@ def _q_u1_union(spark, sf):  # U1 union + distinct
         .groupBy("c_nationkey")
         .agg(F.count("*").cast("bigint").alias("n_selected"))
     )
-
-
-U1_RETIRED_SQL = """
-    WITH u AS (
-      SELECT c_custkey, c_nationkey FROM customer WHERE c_mktsegment = 'BUILDING'
-      UNION
-      SELECT c_custkey, c_nationkey FROM customer WHERE c_acctbal > 5000
-    )
-    SELECT c_nationkey, CAST(COUNT(*) AS BIGINT) AS n_selected FROM u GROUP BY c_nationkey
-"""
-
-
-def _q_c4_line_dedup(spark, sf):
-    """Cross-document boilerplate line removal (L26 — the C4 /
-    MassiveText / RefinedWeb corpus-wide line-dedup step; reference
-    has no text surface, cites C4 §2.2). Synthetic multi-line docs are
-    built IN-QUERY from the documents table — a per-source nav line
-    (df=docs-per-source), the doc's first 60 chars, a global footer
-    (df=corpus), a unique id line — then scrubbed by the production
-    operator (textops.remove_repeated_lines, min_df=5, drop_all). The
-    oracle replays the identical construction + document-frequency ban
-    + anti-join + ordered rebuild in DuckDB; md5(text) keeps the
-    hashed payload compact. Non-vacuous: every row loses >= 2 lines
-    and keeps >= 1."""
-    from irivermetrics_spark.operators import textops
-
-    d = _t(spark, sf, "documents")
-    # coalesce the nullable corpus columns on BOTH sides: concat_ws
-    # SKIPS null parts while SQL || null-propagates the whole doc — a
-    # single NULL source row would hash-diverge the entry (review find)
-    built = d.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.concat_ws(
-            "\n",
-            F.concat(F.lit("nav "), F.coalesce(F.col("source"), F.lit(""))),
-            F.substring(F.coalesce(F.col("text"), F.lit("")), 1, 60),
-            F.lit("subscribe footer"),
-            F.concat(F.lit("id "), F.col("doc_id").cast("string"))).alias("text"))
-    out = textops.remove_repeated_lines(built, min_df=5)
-    return out.select(
-        "doc_id",
-        F.md5(F.col("text")).alias("text_md5"),
-        F.col("lines_removed").cast("int").alias("lines_removed"))
 
 
 def _q_c1_date_regex(spark, sf):  # C1 date-from-filename
@@ -474,43 +286,6 @@ def _q_c1_date_regex(spark, sf):  # C1 date-from-filename
         .groupBy(F.date_format("parsed", "yyyy-MM").alias("month"))
         .agg(F.count("*").cast("bigint").alias("n"))
     )
-
-
-def _q_c5_units(spark, sf):  # C5 unit conversions
-    # RETIRED from the 50-entry board in r6 (slot given to span_dedup):
-    # trivial arithmetic, and the real C5 surface (px²->km², m->km in
-    # operators/metrics.py) is value-pinned by the numpy-parity e2e
-    # (tests/test_pipeline_parity.py) and the c5 kernel tests.
-    p = _t(spark, sf, "part")
-    return p.groupBy("p_type").agg(
-        F.round(F.sum(F.col("p_retailprice") / 1e3), 6).alias("total_kprice"),
-        F.round(F.avg(F.col("p_size") * F.lit(2.54)), 6).alias("avg_size_cm"),
-    )
-
-
-def _q_span_dedup(spark, sf):
-    """ExactSubstr duplicated-span windows (operators/spandedup —
-    Lee et al. 2022 re-expressed as rolling-hash k-token window joins),
-    DuckDB-oracle-checked by VALUE with an INDEPENDENT key: the engine
-    groups windows by a double 64-bit rolling hash, the oracle groups
-    by the window STRING itself — so a hash collision or vectorization
-    bug mismatches instead of hiding.  Duplicates provably exist: every
-    10th document is unioned in as a full copy inside the query (the
-    oracle mirrors it), on top of any natural repeats."""
-    from irivermetrics_spark.operators import spandedup
-
-    d = _t(spark, sf, "documents").select(
-        F.col("doc_id").cast("string").alias("doc_id"), "text")
-    dup = (
-        _t(spark, sf, "documents")
-        .filter(F.col("doc_id") % 10 == 0)
-        .select(F.concat(F.lit("dup_"), F.col("doc_id").cast("string")).alias("doc_id"),
-                "text")
-    )
-    w = spandedup.duplicate_span_windows(d.unionByName(dup), k=8)
-    return w.select(
-        "doc_id", F.col("pos").cast("int").alias("pos"),
-        F.col("n_occurrences").cast("bigint").alias("n_occ"), "keep")
 
 
 def _q_f9_having(spark, sf):  # F9 min-size filter on groups
@@ -532,9 +307,6 @@ def _q_s1_uniform(spark, sf):  # S1 uniformity check shape
 
 
 def _q_a9_stats(spark, sf):  # A9 mean/stddev
-    """Retired from the driver board in r6 to hold the 50-entry cap
-    while ann_ivf_pq joined (judge's suggested swap — A9 is dev-scope
-    F.avg/F.stddev_samp); still pinned by tests/test_scale_ops.py."""
     c = _t(spark, sf, "customer")
     return c.groupBy("c_nationkey").agg(
         F.round(F.avg("c_acctbal"), 4).alias("avg_bal"),
@@ -563,269 +335,9 @@ def _q_p13_salted_agg(spark, sf):  # P13 skew salting: two-phase == plain
     )
 
 
-def _q_dedup_exact(spark, sf):  # exact dedup: hash-groupBy
-    # the documents table has no exact dups at small sf, which made this
-    # check vacuous (0 rows); union a salted duplicate of every 17th doc
-    # inside the query so the dedup provably fires (oracle mirrors it)
-    d = _t(spark, sf, "documents").select("doc_id", "text")
-    dup = d.filter(F.col("doc_id") % 17 == 0).withColumn("doc_id", F.col("doc_id") + 1000000)
-    u = d.unionByName(dup)
-    return (
-        u.groupBy(F.md5("text").alias("text_md5"))
-        .agg(F.count("*").cast("bigint").alias("n_copies"), F.min("doc_id").cast("bigint").alias("keeper"))
-        .filter(F.col("n_copies") > 1)
-    )
-
-
-def _q_dedup_clusters(spark, sf):
-    """Transitive duplicate clustering, oracle-checked: chain pairs
-    (consecutive ids within each exact-dup md5 group) must resolve to
-    min-id clusters — DuckDB computes the same clusters directly from
-    the md5 groups, so the component resolution is verified by value.
-
-    Retired from the driver board in r7 to hold the 50-entry cap while
-    exif_probe joined: the same distccl-backed resolver is exercised
-    end-to-end by the still-green dedup_pipeline entry (and dist_ccl
-    pins the component algebra directly), so this slot was the
-    family's most redundant. Stays callable and pinned by
-    tests/test_scale_ops.py against CLUSTERS_RETIRED_SQL."""
-    from pyspark.sql import Window
-
-    from irivermetrics_spark.operators import dedup
-
-    d = _t(spark, sf, "documents").select("doc_id", "text")
-    dup = d.filter(F.col("doc_id") % 17 == 0).withColumn("doc_id", F.col("doc_id") + 1000000)
-    u = d.unionByName(dup).withColumn("h", F.md5("text"))
-    w = Window.partitionBy("h").orderBy("doc_id")
-    pairs = (
-        u.withColumn("prev", F.lag("doc_id").over(w))
-        .filter(F.col("prev").isNotNull())
-        .select(F.col("prev").alias("id_a"), F.col("doc_id").alias("id_b"))
-    )
-    clusters = dedup.cluster_duplicates(pairs)
-    return clusters.select(F.col("id").cast("bigint").alias("id"),
-                           F.col("cluster").cast("bigint").alias("cluster"))
-
-
-CLUSTERS_RETIRED_SQL = """
-    WITH u AS (
-      SELECT doc_id, text FROM documents
-      UNION ALL
-      SELECT doc_id + 1000000 AS doc_id, text FROM documents WHERE doc_id % 17 = 0
-    ), g AS (
-      SELECT doc_id, md5(text) AS h FROM u
-    ), c AS (
-      SELECT doc_id,
-             MIN(doc_id) OVER (PARTITION BY h) AS cluster,
-             COUNT(*) OVER (PARTITION BY h) AS n
-      FROM g
-    )
-    SELECT CAST(doc_id AS BIGINT) AS id, CAST(cluster AS BIGINT) AS cluster
-    FROM c WHERE n > 1
-"""
-
-
-def _q_exif_probe(spark, sf):
-    """EXIF header metadata (kernels/exif.py, SURVEY §2.12 L38) —
-    generated-data-through-the-real-kernel: deterministic camera
-    fields derived from doc_id are serialized by the kernel's TIFF
-    writer, spliced into a real baseline-JPEG APP1 segment, and parsed
-    back by the header-only IFD walk via multimodal.with_exif. GPS
-    lat/lon use dyadic fractions (k/16, k/32) so the writer's DMS
-    quantization (seconds x 10000) is EXACT integers — no rounding
-    ambiguity — and the oracle replays the parser's
-    d + m/60 + (s/10000)/3600 arithmetic bit-for-bit in SQL (same
-    IEEE-double op order both sides; 6-dp round per board convention)."""
-    import pandas as pd
-
-    from irivermetrics_spark.operators import multimodal
-
-    d = _t(spark, sf, "documents").select(
-        F.col("doc_id").cast("bigint").alias("doc_id"))
-
-    def synth(ids):
-        import numpy as np
-
-        from irivermetrics_spark.kernels import exif as exifk
-        from irivermetrics_spark.kernels import jpeg as jpegk
-
-        base = jpegk.encode_baseline(np.full((1, 8, 8), 90, np.uint8))
-        out = []
-        for i in ids:
-            i = int(i)
-            lat = (1 if i % 2 == 0 else -1) * ((i % 88) + 1 + (i % 16) / 16.0)
-            lon = (1 if i % 3 == 0 else -1) * ((i % 178) + 1 + (i % 32) / 32.0)
-            blob = exifk.build_tiff_exif(
-                orientation=1 + i % 8, make=f"Cam{i % 5}", model=f"M-{i % 3}",
-                datetime_original=f"2020:01:{i % 28 + 1:02d} {i % 24:02d}:00:00",
-                gps=(lat, lon))
-            out.append(exifk.insert_exif_app1(base, blob))
-        return pd.Series(out)
-
-    tagged = d.withColumn("bytes", F.pandas_udf(synth, "binary")("doc_id"))
-    out = multimodal.with_exif(tagged)
-    return out.select(
-        "doc_id",
-        F.col("orientation").cast("int").alias("orientation"),
-        "make", "model", "datetime_original",
-        F.round("gps_lat", 6).alias("gps_lat"),
-        F.round("gps_lon", 6).alias("gps_lon"),
-    )
-
-
-def _q_dedup_pipeline(spark, sf):
-    """The full near-dup pipeline composed end-to-end: MinHash-LSH
-    candidates -> exact-Jaccard verify -> transitive clustering ->
-    min-id keeper -> surviving docs per lang. The shape a real corpus
-    dedup job runs (candidates never all-pairs, keeper per CLUSTER).
-
-    DuckDB-value-pinned via exact-copy salt: verified pairs are
-    filtered to normalized-identical texts (see _norm_md5 — jaccard
-    alone is not cross-engine computable), so the keeper census per
-    lang equals the SQL min-id-per-normalized-md5-group census. The
-    clustering/keeper machinery is the same distccl-backed resolver
-    the dedup_clusters entry value-pins on chained pairs."""
-    from irivermetrics_spark.operators import dedup
-
-    d = _t(spark, sf, "documents").select("doc_id", "text", "lang")
-    dup = d.filter(F.col("doc_id") % 11 == 0).withColumn("doc_id", F.col("doc_id") + 3000000)
-    u = d.unionByName(dup)
-    cand = dedup.lsh_candidates(u, "doc_id", "text")
-    verified = dedup.exact_jaccard_pairs(u, cand, "doc_id", "text").filter(F.col("jaccard") >= 1.0)
-    norm = u.select(F.col("doc_id"), _norm_md5(F.col("text")).alias("h"))
-    pairs = (
-        verified.join(norm.select(F.col("doc_id").alias("id_a"), F.col("h").alias("ha")), "id_a")
-        .join(norm.select(F.col("doc_id").alias("id_b"), F.col("h").alias("hb")), "id_b")
-        .filter(F.col("ha") == F.col("hb"))
-        .select("id_a", "id_b")
-    )
-    kept = dedup.keep_canonical(u, pairs)
-    return kept.groupBy("lang").agg(F.count("*").cast("bigint").alias("n_kept_docs"))
-
-
-def _q_text_quality(spark, sf):  # token counts + quality features
-    from irivermetrics_spark.operators import textops
-
-    d = _t(spark, sf, "documents")
-    feats = d.select(
-        "lang", "source",
-        textops.token_count(F.col("text")).alias("n_tokens"),
-        F.length("text").cast("bigint").alias("n_chars2"),
-    )
-    return feats.groupBy("lang", "source").agg(
-        F.round(F.avg("n_tokens"), 6).alias("avg_tokens"),
-        F.max("n_chars2").cast("bigint").alias("max_chars"),
-        F.count("*").cast("bigint").alias("n_docs"),
-    )
-
-
-def _q_text_langid(spark, sf):  # marker-ngram language heuristic
-    from irivermetrics_spark.operators import textops
-
-    d = _t(spark, sf, "documents")
-    return (
-        d.select("source", textops.marker_score(F.col("text")).alias("score"))
-        .groupBy("source")
-        .agg(F.round(F.avg("score"), 6).alias("avg_marker_score"))
-    )
-
-
-def _q_text_tokens_bpe(spark, sf):
-    """BPE-ish regex token budgeting. Retired from the driver board in
-    r7 — superseded by bpe_tokens, which pins the TRAINED tokenizer
-    (operators/bpe.py) instead of the pre-tokenizer-segment stand-in.
-    Stays callable and pinned by tests/test_scale_ops.py against
-    TOKENS_BPE_RETIRED_SQL."""
-    from irivermetrics_spark.operators import textops
-
-    d = _t(spark, sf, "documents")
-    n = textops.bpe_like_token_count(F.col("text"))
-    return d.groupBy("lang").agg(
-        F.sum(n).cast("bigint").alias("total_bpe_tokens"),
-        F.round(F.avg(n), 6).alias("avg_bpe_tokens"),
-    )
-
-
-TOKENS_BPE_RETIRED_SQL = r"""
-    WITH t AS (
-      SELECT lang,
-             len(regexp_extract_all(text, '[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]|\s+')) AS n
-      FROM documents
-    )
-    SELECT lang,
-           CAST(SUM(n) AS BIGINT) AS total_bpe_tokens,
-           ROUND(AVG(n), 6) AS avg_bpe_tokens
-    FROM t GROUP BY lang
-"""
-
-
-def _q_text_chunks(spark, sf):
-    """Context-window document chunking (textops.chunk_documents, L31)
-    over the real documents table: 16-token windows overlapping by 4.
-    Pure JVM arithmetic windows (zero-Exchange — the plan pipelines
-    into the scan); the DuckDB oracle replays the same window starts
-    with unnest(range(...)) + list_slice. The corpus is ASCII, so the
-    Java (?U)\\s+ split and RE2 \\s+ agree byte-for-byte."""
-    from irivermetrics_spark.operators import textops
-
-    d = _t(spark, sf, "documents").select("doc_id", "text")
-    out = textops.chunk_documents(d, max_tokens=16, overlap=4)
-    return out.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.col("chunk_idx").cast("bigint").alias("chunk_idx"),
-        F.col("chunk_text"),
-        F.col("chunk_tokens").cast("bigint").alias("chunk_tokens"),
-    )
-
-
-def _q_semdedup(spark, sf):
-    """SemDeDup semantic dedup (operators/semdedup.py), keeper output.
-
-    n_clusters=1 degenerates to the exact brute-force intra-cluster
-    pair scan (the nprobe=n_lists trick that pins ann_ivf), so the
-    DuckDB oracle can re-derive the survivors: salted exact copies
-    (vec_id+1e6 for vec_id<6, +2e6 for vec_id<3) form cliques whose
-    min-id keeper survives; the corpus max off-diagonal cosine (~0.51
-    at small sf) keeps the 0.95 threshold unambiguous, so losers ==
-    ids with any smaller >=0.95 neighbor. Clustered-mode recall and
-    component collapse are pytest-pinned (test_semdedup_phash.py).
-    (Retired text_langid_argmax to hold the 50-entry cap; langid
-    argmax semantics moved to a pytest pin in test_textops_dedup.py.)"""
-    from irivermetrics_spark.operators import semdedup
-
-    em = _t(spark, sf, "embeddings")
-    dup1 = em.filter(F.col("vec_id") < 6).withColumn("vec_id", F.col("vec_id") + 1000000)
-    dup2 = em.filter(F.col("vec_id") < 3).withColumn("vec_id", F.col("vec_id") + 2000000)
-    u = em.unionByName(dup1).unionByName(dup2)
-    kept = semdedup.semdedup_keep(u, n_clusters=1, threshold=0.95, round_to=6)
-    return kept.select(F.col("vec_id").cast("bigint").alias("vec_id"))
-
-
-def _q_ann_brute(spark, sf):  # brute-force cosine top-k
-    from pyspark.sql import Window
-
-    from irivermetrics_spark.operators.similarity import cosine_expr
-
-    em = _t(spark, sf, "embeddings")
-    q = em.filter(F.col("vec_id") < 3).select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec"))
-    base = em.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("nvec"))
-    scored = base.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id")).withColumn(
-        "cos6", F.round(cosine_expr("qvec", "nvec"), 6)
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos6"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 5)
-        .select(F.col("query_id").cast("bigint").alias("query_id"),
-                F.col("neighbor_id").cast("bigint").alias("neighbor_id"),
-                F.round("cos6", 4).alias("cosine"),
-                F.col("rk").cast("bigint").alias("rk"))
-    )
-
-
 # --------------------------------------------------------------------------
-# engine / spatial / scale operators (rows-only checks; verified vs numpy
-# oracles in tests/)
+# engine / spatial operators (DuckDB-oracle-checked unless rows-only;
+# the flagship-fixture variants are verified vs numpy oracles in tests/)
 # --------------------------------------------------------------------------
 
 def _q_flagship_metrics(spark, sf):
@@ -922,81 +434,11 @@ def _q_tile_assign_oracle(spark, sf):
     )
 
 
-def _q_text_pii(spark, sf):
-    """PII redaction, DuckDB-oracle-checked end-to-end (L14): the
-    corpus text is augmented IN-QUERY with deterministic synthetic PII
-    derived from (doc_id, source) — an email, an IPv4, an SSN-shaped
-    id — then scrubbed by the production regexp chain
-    (textops.with_pii_redaction); the oracle replays the identical
-    augmentation + rule chain in DuckDB/RE2, generated from the SAME
-    PII_RULES list. Byte-exact: per-kind counts as BIGINT plus
-    md5(redacted_text). The rules are engineered alternation/
-    lookaround/non-ASCII-class-free precisely so Java regex and RE2
-    agree on every match (pinned three-engine in
-    tests/test_textops_pii.py)."""
-    from irivermetrics_spark.operators import textops
-
-    d = _t(spark, sf, "documents")
-    aug = d.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.concat(
-            F.lit("contact "), F.col("source"), F.lit("@example.com via 10.0."),
-            (F.col("doc_id") % 256).cast("string"), F.lit(".7 id "),
-            F.lpad((F.col("doc_id") % 900 + 100).cast("string"), 3, "0"),
-            F.lit("-"),
-            F.lpad((F.col("doc_id") % 89 + 10).cast("string"), 2, "0"),
-            F.lit("-"),
-            F.lpad((F.col("doc_id") % 9000 + 1000).cast("string"), 4, "0"),
-            F.lit(" call 555."),
-            F.lpad((F.col("doc_id") % 800 + 100).cast("string"), 3, "0"),
-            F.lit("."),
-            F.lpad((F.col("doc_id") % 7000 + 2000).cast("string"), 4, "0"),
-            F.lit(" "), F.col("text"),
-        ).alias("text"))
-    out = textops.with_pii_redaction(aug)
-    return out.select(
-        "doc_id", "n_pii_email", "n_pii_ipv4", "n_pii_ssn", "n_pii_phone",
-        F.md5("redacted_text").alias("redacted_md5"))
-
-
-def _text_pii_oracle_sql() -> str:
-    from irivermetrics_spark.operators.textops import PII_RULES
-
-    aug = """
-        SELECT CAST(doc_id AS BIGINT) AS doc_id,
-               'contact ' || source || '@example.com via 10.0.' ||
-               CAST(doc_id % 256 AS VARCHAR) || '.7 id ' ||
-               lpad(CAST(doc_id % 900 + 100 AS VARCHAR), 3, '0') || '-' ||
-               lpad(CAST(doc_id % 89 + 10 AS VARCHAR), 2, '0') || '-' ||
-               lpad(CAST(doc_id % 9000 + 1000 AS VARCHAR), 4, '0') ||
-               ' call 555.' || lpad(CAST(doc_id % 800 + 100 AS VARCHAR), 3, '0') ||
-               '.' || lpad(CAST(doc_id % 7000 + 2000 AS VARCHAR), 4, '0') || ' ' ||
-               text AS t0
-        FROM documents"""
-    ctes = [f"r0 AS ({aug})"]
-    cur = "t0"
-    for i, (kind, pat, tok) in enumerate(PII_RULES, start=1):
-        ctes.append(
-            f"r{i} AS (SELECT *, "
-            f"CAST(len(regexp_extract_all({cur}, '{pat}')) AS BIGINT) AS n_pii_{kind}, "
-            f"regexp_replace({cur}, '{pat}', '{tok}', 'g') AS t{i} FROM r{i - 1})")
-        cur = f"t{i}"
-    kinds = ", ".join(f"n_pii_{kind}" for kind, _, _ in PII_RULES)
-    return (f"WITH {', '.join(ctes)} "
-            f"SELECT doc_id, {kinds}, md5({cur}) AS redacted_md5 "
-            f"FROM r{len(PII_RULES)}")
-
-
 def _q_pip_oracle(spark, sf):
     """Exact ray-casting point-in-polygon re-derived as a points x
-    edges SQL aggregate over a fixed concave ring. Retired from the
-    driver board in r6 to hold the 50-entry cap while phash_neardup
-    joined: the same crossing-number rule (functions/geometry.py:
-    point_in_polygon — half-open (ya>py)!=(yb>py) edges, strict
-    px<xint) is pinned bit-for-bit with EXACT operand order inside the
-    hash-green zonal_join_rows oracle (6840 rows) and drives j1_star;
-    this standalone entry remains callable and pinned by
-    tests/test_scale_ops.py against PIP_RETIRED_SQL."""
+    edges SQL aggregate over a fixed concave ring: the crossing-number
+    rule of functions/geometry.py:point_in_polygon (half-open
+    (ya>py)!=(yb>py) edges, strict px<xint)."""
     import numpy as np
     import pandas as pd
 
@@ -1022,140 +464,14 @@ def _q_pip_oracle(spark, sf):
     )
 
 
-# concave test ring shared by _q_pip_oracle and PIP_RETIRED_SQL
+# concave test ring of _q_pip_oracle (its oracle_sql edges spell it out)
 PIP_RING_X = [0.3, 120.4, 60.1, 110.7, 5.2]
 PIP_RING_Y = [0.7, 10.2, 55.3, 95.9, 80.1]
 
-# the retired pip_oracle SQL, kept for the pytest pin
-# (tests/test_scale_ops.py::test_pip_retired_entry_still_matches_duckdb)
-PIP_RETIRED_SQL = """
-    WITH pts AS (
-      SELECT event_id, value * 0.27 AS x, (event_id % 101) * 1.01 AS y
-      FROM events WHERE value IS NOT NULL
-    ), edges(xa, ya, xb, yb) AS (
-      VALUES (0.3, 0.7, 120.4, 10.2),
-             (120.4, 10.2, 60.1, 55.3),
-             (60.1, 55.3, 110.7, 95.9),
-             (110.7, 95.9, 5.2, 80.1),
-             (5.2, 80.1, 0.3, 0.7)
-    ), hits AS (
-      -- crossing-number rule, exactly the engine's half-open
-      -- (ya>py)!=(yb>py) edges with strict px < xint
-      SELECT p.event_id, p.x,
-             SUM(CASE WHEN ((e.ya > p.y) <> (e.yb > p.y))
-                       AND p.x < e.xa + (p.y - e.ya) * (e.xb - e.xa) / (e.yb - e.ya)
-                      THEN 1 ELSE 0 END) AS crossings
-      FROM pts p CROSS JOIN edges e
-      GROUP BY p.event_id, p.x
-    )
-    SELECT (crossings % 2 = 1) AS inside,
-           CAST(COUNT(*) AS BIGINT) AS n_points,
-           ROUND(SUM(x), 4) AS sum_x
-    FROM hits GROUP BY 1
-"""
-
-
-# phash_neardup board entry: target bit patterns (block index -> set
-# bit), shared between the Spark entry (which builds real raster
-# payloads realizing each pattern) and the DuckDB oracle (which
-# re-derives the full pixel->block-mean->median->bit-pack->hamming
-# chain from the same constants). All indices < 63 (no sign bit) and
-# <= 32 ones (median stays at the low block value). Family a: base +
-# 1-3 bit flips (a1<->a3 sits at hamming 4 — the just-excluded pair);
-# family b: a distant pattern + a 2-bit variant.
-_PHASH_PATTERNS: dict[str, list[int]] = {
-    "a0": list(range(24)),
-    "a1": [i for i in range(24) if i != 0] + [30],
-    "a2": list(range(24)) + [24],
-    "a3": [i for i in range(24) if i not in (1, 2)],
-    "b0": list(range(40, 56)) + [8, 9],
-    "b1": list(range(40, 56)) + [8, 33],
-}
-
-
-def _q_phash_neardup(spark, sf):
-    """Perceptual-hash image near-dup (multimodal.phash_neardup): the
-    input-hint table's own ``phash:int64`` column semantics as a
-    first-class operator, DuckDB-value-pinned end to end.
-
-    Generated-data-through-real-kernel (the multimodal_stats trick):
-    each image realizes a target 8x8 bit pattern as 2x2 pixel blocks
-    of mean 100 (bit 0) or 110 (bit 1) with +/-1 in-block texture, so
-    the REAL raw16 encode -> decode -> band-mean -> 8x8 block-mean ->
-    median-threshold -> bit-pack chain (codecs.phash64 via one
-    mapInPandas pass) must reproduce exactly sum(1<<bit), and the REAL
-    Manku pigeonhole banded join (dedup.hamming_candidates, shared
-    with SimHash) must surface exactly the <=3-hamming pairs. The
-    oracle re-derives every step in SQL from the same pattern
-    constants: pixels via range(), block means via AVG, median via
-    MEDIAN, pack via bit-shift SUM, pairs via xor + bit_count.
-    (Retired pip_oracle to hold the 50-entry cap — see _q_pip_oracle.)
-    Cross-codec robustness (jpeg/png/webp re-encodes of one artwork
-    pairing up) is pytest-pinned in test_semdedup_phash.py."""
-    import numpy as np
-    import pandas as pd
-
-    from irivermetrics_spark import codecs
-    from irivermetrics_spark.operators import multimodal
-
-    delta = np.tile(np.array([[-1, 1], [1, -1]], np.int64), (8, 8))
-    rows = []
-    for name, bits in _PHASH_PATTERNS.items():
-        m = np.full((8, 8), 100, np.int64)
-        for b in bits:
-            m[b // 8, b % 8] = 110
-        img = (np.kron(m, np.ones((2, 2), np.int64)) + delta).astype(np.uint16)
-        rows.append(dict(image_id=name,
-                         bytes=codecs.encode_image(np.stack([img] * 3)),
-                         fmt=codecs.FMT_RAW16))
-    df = spark.createDataFrame(pd.DataFrame(rows))
-    pairs = multimodal.phash_neardup(df, max_hamming=3)
-    return pairs.select("id_a", "id_b", F.col("hamming").cast("bigint").alias("hamming"))
-
-
-def _phash_neardup_sql() -> str:
-    """DuckDB re-derivation of the full phash_neardup chain from the
-    shared _PHASH_PATTERNS constants (see _q_phash_neardup)."""
-    vals = ", ".join(
-        f"('{n}', CAST({sum(1 << b for b in bits)} AS BIGINT))"
-        for n, bits in _PHASH_PATTERNS.items()
-    )
-    return f"""
-        WITH imgs(img_id, p) AS (VALUES {vals}),
-        px AS (
-          -- the same 16x16 single-band image the entry encodes: block
-          -- (y//2, x//2) carries 100 + 10*bit, +/-1 checker texture
-          SELECT img_id, y.range AS y, x.range AS x,
-                 100 + 10 * ((p >> CAST((y.range // 2) * 8 + (x.range // 2) AS INTEGER)) & 1)
-                     + CASE WHEN (y.range + x.range) % 2 = 0 THEN -1 ELSE 1 END AS v
-          FROM imgs, range(16) y, range(16) x
-        ), blocks AS (
-          SELECT img_id, (y // 2) * 8 + (x // 2) AS bi, AVG(v) AS bm
-          FROM px GROUP BY 1, 2
-        ), med AS (
-          SELECT img_id, MEDIAN(bm) AS md FROM blocks GROUP BY 1
-        ), ph AS (
-          SELECT b.img_id,
-                 SUM(CASE WHEN bm > md THEN (CAST(1 AS BIGINT) << CAST(bi AS INTEGER))
-                          ELSE CAST(0 AS BIGINT) END) AS phash
-          FROM blocks b JOIN med USING (img_id) GROUP BY 1
-        ), pairs AS (
-          SELECT a.img_id AS id_a, b.img_id AS id_b,
-                 bit_count(xor(a.phash, b.phash)) AS hamming
-          FROM ph a JOIN ph b ON a.img_id < b.img_id
-        )
-        SELECT id_a, id_b, CAST(hamming AS BIGINT) AS hamming
-        FROM pairs WHERE hamming <= 3
-    """
-
 
 def _q_haversine_oracle(spark, sf):
-    """Exact haversine + planar->lonlat bridge re-derived in SQL
-    trigonometry. Retired from the driver board in r6 to hold the
-    50-entry cap while text_repetition joined: the identical haversine
-    + planar->lonlat SQL lives inside the knn_pools oracle (which
-    re-ranks by it), so C7 stays hash-pinned there; this function
-    remains callable and pinned by tests/test_scale_ops.py."""
+    """Exact haversine + planar->lonlat bridge (C7) re-derived in SQL
+    trigonometry; the knn_pools oracle re-ranks by the same SQL."""
     import pandas as pd
 
     from irivermetrics_spark.functions import geometry
@@ -1179,65 +495,6 @@ def _q_haversine_oracle(spark, sf):
         F.round(F.avg("dist_m"), 4).alias("avg_dist_m"),
         F.round(F.max("dist_m"), 4).alias("max_dist_m"),
         F.round(F.min("dist_m"), 4).alias("min_dist_m"),
-    )
-
-
-# the retired haversine_oracle SQL, kept for the pytest pin
-# (tests/test_scale_ops.py::test_haversine_retired_entry_still_matches_duckdb)
-HAVERSINE_RETIRED_SQL = """
-    WITH pts AS (
-      SELECT value * 11.3 AS x1, (event_id % 211) * 13.7 AS y1,
-             value * 5.9 + 1500.0 AS x2, (event_id % 173) * 23.1 AS y2
-      FROM events WHERE value IS NOT NULL
-    ), ll AS (
-      SELECT 120.0 + x1 / (((pi() * 6371008.8) / 180.0) * cos(-18.0 * (pi() / 180.0))) AS lon1,
-             -18.0 + y1 / ((pi() * 6371008.8) / 180.0) AS lat1,
-             120.0 + x2 / (((pi() * 6371008.8) / 180.0) * cos(-18.0 * (pi() / 180.0))) AS lon2,
-             -18.0 + y2 / ((pi() * 6371008.8) / 180.0) AS lat2
-      FROM pts
-    ), r AS (
-      SELECT lat1 * (pi() / 180.0) AS la1, lon1 * (pi() / 180.0) AS lo1,
-             lat2 * (pi() / 180.0) AS la2, lon2 * (pi() / 180.0) AS lo2
-      FROM ll
-    ), d AS (
-      SELECT ROUND(2.0 * 6371008.8 * asin(sqrt(LEAST(GREATEST(
-               sin((la2 - la1) / 2.0) * sin((la2 - la1) / 2.0)
-               + (cos(la1) * cos(la2)) * (sin((lo2 - lo1) / 2.0) * sin((lo2 - lo1) / 2.0)),
-             0.0), 1.0))), 4) AS dist_m
-      FROM r
-    )
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_pairs,
-           ROUND(AVG(dist_m), 4) AS avg_dist_m,
-           ROUND(MAX(dist_m), 4) AS max_dist_m,
-           ROUND(MIN(dist_m), 4) AS min_dist_m
-    FROM d
-"""
-
-
-def _q_text_repetition(spark, sf):
-    """Gopher-style repetition quality signals (textops.py:149-217,
-    Rae et al. 2021 §A1.1), DuckDB-value-pinned. The synthetic corpus
-    is single-line, so the entry first re-chunks each document's words
-    into 2-word lines joined by '\\n' (even doc_id) or '\\r\\n' (odd —
-    exercising the CRLF-aware split) with pure JVM expressions, then
-    runs the REAL operator: dup_line_frac (1 - distinct/total lines)
-    and top_bigram_frac (array_sort + linear run-length aggregate).
-    The oracle recomputes both from DuckDB list algebra over the same
-    re-chunking. Small vocab => both signals are far from constant
-    (non-vacuous across the corpus)."""
-    from irivermetrics_spark.operators import textops
-
-    d = _t(spark, sf, "documents")
-    lines = ("transform(sequence(0, CAST(ceil(size(split(text, ' ', -1)) / 2.0) AS INT) - 1), "
-             "i -> concat_ws(' ', slice(split(text, ' ', -1), i * 2 + 1, 2)))")
-    mtext = (f"CASE WHEN doc_id % 2 = 1 THEN array_join({lines}, '\\r\\n') "
-             f"ELSE array_join({lines}, '\\n') END")
-    multi = d.selectExpr("doc_id", f"{mtext} AS text")
-    out = textops.with_repetition_signals(multi)
-    return out.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        "dup_line_frac",
-        "top_bigram_frac",
     )
 
 
@@ -1325,102 +582,6 @@ def _q_knn_pools(spark, sf):
     )
 
 
-def _norm_md5(col):
-    """md5 of the shingle normalization (lowercase + whitespace
-    collapse, dedup._shingles semantics) — the cross-engine duplicate
-    identity used by the value-pinned dedup oracles. NOTE: jaccard==1.0
-    alone is NOT this identity: the synthetic corpus contains pairs
-    with different texts but identical 5-gram shingle SETS (repeated
-    word soup), which DuckDB can't recompute — so the oracle-checked
-    entries pin on normalized-text equality and require the LSH path
-    to have surfaced those pairs."""
-    return F.md5(F.lower(F.regexp_replace(F.trim(col), r"\s+", " ")))
-
-
-def _q_dedup_minhash(spark, sf):
-    """MinHash-LSH recall on salted duplicates, DuckDB-value-pinned:
-    every exact copy (incl. an UPPERCASED copy — pins the shingle
-    normalization) MUST surface through signatures -> banding ->
-    bucket join -> exact-Jaccard verify with est_jaccard == jaccard
-    == 1.0. Identical shingle sets give identical signatures, so the
-    banded join is guaranteed-recall for this class; the oracle is the
-    normalized-md5 self-join."""
-    from irivermetrics_spark.operators import dedup
-
-    d = _t(spark, sf, "documents").select("doc_id", "text")
-    dup1 = d.filter(F.col("doc_id") % 17 == 0).withColumn("doc_id", F.col("doc_id") + 1000000)
-    dup2 = (
-        d.filter(F.col("doc_id") % 23 == 0)
-        .withColumn("doc_id", F.col("doc_id") + 2000000)
-        .withColumn("text", F.upper("text"))
-    )
-    u = d.unionByName(dup1).unionByName(dup2)
-    cand = dedup.lsh_candidates(u, "doc_id", "text")
-    pairs = dedup.exact_jaccard_pairs(u, cand, "doc_id", "text")
-    norm = u.select(F.col("doc_id"), _norm_md5(F.col("text")).alias("h"))
-    return (
-        pairs.join(norm.select(F.col("doc_id").alias("id_a"), F.col("h").alias("ha")), "id_a")
-        .join(norm.select(F.col("doc_id").alias("id_b"), F.col("h").alias("hb")), "id_b")
-        .filter((F.col("jaccard") >= 1.0) & (F.col("ha") == F.col("hb")))
-        .select(
-            F.col("id_a").cast("bigint").alias("id_a"),
-            F.col("id_b").cast("bigint").alias("id_b"),
-            F.round("est_jaccard", 6).alias("est_jaccard"),
-            F.round("jaccard", 6).alias("jaccard"),
-        )
-    )
-
-
-def _q_dedup_simhash(spark, sf):
-    """SimHash pigeonhole recall on salted duplicates, DuckDB-value-
-    pinned: identical normalized texts have identical 64-bit simhash,
-    so every salted copy MUST surface at hamming 0 through the block
-    combo join. (Near-identical raw pairs can also collide at hamming
-    0 — the normalized-md5 equality filter keeps the comparison set
-    cross-engine computable; the full candidate list at hamming<=3
-    stays pytest-covered.)"""
-    from irivermetrics_spark.operators import dedup
-
-    d = _t(spark, sf, "documents").select("doc_id", "text")
-    dup = d.filter(F.col("doc_id") % 19 == 0).withColumn("doc_id", F.col("doc_id") + 4000000)
-    u = d.unionByName(dup)
-    cand = dedup.simhash_candidates(u, "doc_id", "text", max_hamming=3)
-    norm = u.select(F.col("doc_id"), _norm_md5(F.col("text")).alias("h"))
-    return (
-        cand.filter(F.col("hamming") == 0)
-        .join(norm.select(F.col("doc_id").alias("id_a"), F.col("h").alias("ha")), "id_a")
-        .join(norm.select(F.col("doc_id").alias("id_b"), F.col("h").alias("hb")), "id_b")
-        .filter(F.col("ha") == F.col("hb"))
-        .select(
-            F.col("id_a").cast("bigint").alias("id_a"),
-            F.col("id_b").cast("bigint").alias("id_b"),
-            F.col("hamming").cast("bigint").alias("hamming"),
-        )
-    )
-
-
-def _q_text_fingerprint(spark, sf):
-    from irivermetrics_spark.operators import textops
-
-    # union whitespace-perturbed duplicates (extra spaces) of every 13th
-    # doc: the normalized fingerprint must still collide, so the dedup
-    # provably fires (the raw table has no dups at small sf — 0 rows
-    # made this check vacuous in round 1)
-    d = _t(spark, sf, "documents").select("doc_id", "text")
-    dup = (
-        d.filter(F.col("doc_id") % 13 == 0)
-        .withColumn("doc_id", F.col("doc_id") + 2000000)
-        .withColumn("text", F.regexp_replace("text", " ", "  "))
-    )
-    u = d.unionByName(dup)
-    return (
-        textops.with_fingerprint(u)
-        .groupBy("fingerprint")
-        .agg(F.count("*").cast("bigint").alias("n"), F.min("doc_id").cast("bigint").alias("keeper"))
-        .filter(F.col("n") > 1)
-    )
-
-
 def _geom_csv(col: str):
     """Serialize an array<double> geometry column to a deterministic
     comma-joined string (driver canonicalizer sorts/hashes columns and
@@ -1493,310 +654,11 @@ def _q_dist_ccl(spark, sf):
     )
 
 
-def _q_emb_neardup(spark, sf):
-    """Embedding-cosine near-duplicate pairs via SRP-LSH.
-
-    The raw embeddings have no >=0.95-cosine pairs at small sf (round-1
-    run at 0.6 returned 0 rows: vacuous), so the query unions exact
-    copies of vec_id < 8 — identical vectors collide in every SRP
-    bucket, so the LSH path must surface them."""
-    from irivermetrics_spark.operators import similarity
-
-    em = _t(spark, sf, "embeddings")
-    dup = em.filter(F.col("vec_id") < 8).withColumn("vec_id", F.col("vec_id") + 1000000)
-    u = em.unionByName(dup)
-    # round_to=6 pins the value cross-engine; identical vectors collide
-    # in every SRP bucket so LSH recall is guaranteed for this class,
-    # and the corpus max off-diagonal cosine (~0.51 at small sf) keeps
-    # the 0.95 threshold unambiguous — the DuckDB brute-force pair scan
-    # must find exactly the salted pairs
-    return similarity.cosine_neardup_pairs(u, threshold=0.95, round_to=6).select(
-        F.col("id_a").cast("bigint").alias("id_a"),
-        F.col("id_b").cast("bigint").alias("id_b"),
-        F.col("cosine"),
-    )
-
-
-def _q_multimodal_transform(spark, sf):
-    """Multimodal binary transforms, DuckDB-value-pinned via the
-    generated-data-through-real-kernel trick (the move that greened
-    multimodal_stats in r3): pixel values follow a LINEAR formula, so
-    the real block-mean resize kernel (multimodal.py:62, integral 2x2
-    ratio -> exact integer block means) and the real video-container
-    frame sampler (multimodal.py:114) produce stats the oracle derives
-    from pure range() arithmetic — any corruption in decode/resize/
-    re-encode/frame-offset walking shifts a mean and breaks the hash.
-    (Fixture-image resize + caption pass-through stay pytest-covered,
-    tests/test_multimodal.py.)"""
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    from irivermetrics_spark import codecs
-    from irivermetrics_spark.operators import multimodal
-
-    NB, H, W = 3, 24, 32           # resized 2x2 -> (3, 12, 16)
-    VF, VB, VH, VW = 10, 2, 8, 12  # videos: 10 frames, every 4th kept
-
-    def gen_img(k: int) -> np.ndarray:
-        b, y, x = np.meshgrid(np.arange(NB), np.arange(H), np.arange(W), indexing="ij")
-        return (k * 101 + b * 1000 + y * 13 + x * 7).astype(np.uint16)
-
-    def gen_vid(v: int) -> np.ndarray:
-        f, b, y, x = np.meshgrid(np.arange(VF), np.arange(VB), np.arange(VH),
-                                 np.arange(VW), indexing="ij")
-        return (v * 509 + f * 251 + b * 997 + y * 13 + x * 7).astype(np.uint16)
-
-    images = spark.createDataFrame(pd.DataFrame(
-        [dict(image_id=f"gen_{k}", bytes=codecs.encode_image(gen_img(k)),
-              fmt=codecs.FMT_RAW16) for k in range(8)]))
-    rs = multimodal.resize_images(images, W // 2, H // 2)
-    videos = spark.createDataFrame(pd.DataFrame(
-        [dict(video_id=f"v{v}", bytes=multimodal.encode_video(gen_vid(v)))
-         for v in range(3)]))
-    fr = multimodal.frame_sample(videos, every_k=4)
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for rec in pdf.itertuples(index=False):
-                arr = codecs.decode_image(bytes(rec.bytes))
-                out.append(dict(item_id=rec.item_id, idx=int(rec.idx),
-                                w=int(arr.shape[2]), h=int(arr.shape[1]),
-                                mean_val=float(arr.mean()),
-                                sum_val=int(arr.sum())))
-            yield pd.DataFrame(out) if out else pd.DataFrame(dict(
-                item_id=pd.Series(dtype="str"), idx=pd.Series(dtype="int64"),
-                w=pd.Series(dtype="int64"), h=pd.Series(dtype="int64"),
-                mean_val=pd.Series(dtype="float64"), sum_val=pd.Series(dtype="int64")))
-
-    schema = "item_id string, idx long, w long, h long, mean_val double, sum_val long"
-    both = (
-        rs.select(F.col("image_id").alias("item_id"),
-                  F.lit(0).cast("long").alias("idx"), "bytes")
-        .unionByName(fr.select(F.col("video_id").alias("item_id"),
-                               F.col("frame_idx").cast("long").alias("idx"), "bytes"))
-    )
-    out = both.mapInPandas(stats, schema)
-    return out.select(
-        F.when(F.col("item_id").startswith("gen_"), "resize").otherwise("frame").alias("kind"),
-        "item_id", "idx", "w", "h",
-        F.round("mean_val", 6).alias("mean_val"),
-        F.col("sum_val").cast("bigint").alias("sum_val"),
-    )
-
-
-def _q_ann_ivf(spark, sf):
-    """IVF coarse-quantizer ANN (the non-LSH scale path), DuckDB-value-
-    pinned: nprobe == n_lists probes every inverted list, so the
-    assign -> probe -> list equi-join -> exact-cosine re-rank pipeline
-    must return the true top-k (= the SQL brute-force ranking).
-    Approximate-recall behavior at nprobe < n_lists stays pytest-gated
-    (tests vs the brute oracle on clustered data)."""
-    from irivermetrics_spark.operators import ivf
-
-    em = _t(spark, sf, "embeddings")
-    C = ivf.train_centroids(em, n_lists=16, sample=512, iters=6)
-    q = em.filter(F.col("vec_id") % 100 == 5)
-    out = ivf.ivf_topk(em, q, C, k=5, nprobe=16, round_to=6)
-    return out.select(
-        F.col("query_id").cast("bigint").alias("query_id"),
-        F.col("neighbor_id").cast("bigint").alias("neighbor_id"),
-        F.round("cosine", 4).alias("cosine"),
-        F.col("rank").cast("bigint").alias("rk"),
-    )
-
-
-def _q_image_embed_neardup(spark, sf):
-    """Image near-duplicate detection through the multimodal->ANN
-    bridge, DuckDB-value-pinned on PAIR MEMBERSHIP: deterministic
-    textured families, each present as raw16 original + qlossy
-    re-encode + baseline-JPEG q95 re-encode (the from-scratch T.81
-    codec, kernels/jpeg.py), flow through the REAL decode -> content
-    embedding (multimodal.py:144) -> SRP-LSH cosine pair pipeline.
-    Exactly the 3 within-family pairs per base must survive (lossy
-    twins pair, distinct textures don't), so the oracle is the family
-    combinatorics in SQL — a corruption in any codec, the pooling
-    kernel, the normalization, the bucketing or the threshold breaks
-    membership. (Float cosine VALUES are pinned by emb_neardup/ann_*;
-    decoded-pixel values by multimodal_stats.)"""
-    import numpy as np
-    import pandas as pd
-
-    from irivermetrics_spark import codecs
-    from irivermetrics_spark.kernels import jpeg
-    from irivermetrics_spark.operators import multimodal, similarity
-
-    H, W = 32, 48
-    y, x = np.meshgrid(np.arange(H), np.arange(W), indexing="ij")
-    rows = []
-    for k in range(6):
-        # block-scale (1-3 period) waves at distinct frequency/phase per
-        # family: the 6x4 pooled grid then CAPTURES the texture instead
-        # of averaging it out, decorrelating families (measured margins:
-        # within-family cos >= 0.999999, cross-family <= 0.94)
-        base = 80.0 + 18.0 * k
-        amp = 0.8 * base
-        u8 = np.stack([
-            base + amp * np.sin(2 * np.pi * ((k % 3 + 1) * x / W
-                                             + (k // 3 + 1) * y / H)
-                                + 0.9 * k + 0.5 * c)
-            for c in range(3)
-        ]).clip(0, 255).astype(np.uint8)
-        rows.append(dict(image_id=f"img{k}_raw",
-                         bytes=codecs.encode_image(u8.astype(np.uint16)),
-                         fmt=codecs.FMT_RAW16))
-        rows.append(dict(image_id=f"img{k}_q",
-                         bytes=codecs.encode_image(u8.astype(np.uint16),
-                                                   codecs.FMT_QLOSSY),
-                         fmt=codecs.FMT_QLOSSY))
-        rows.append(dict(image_id=f"img{k}_j",
-                         bytes=jpeg.encode_baseline(u8, quality=95),
-                         fmt="jpeg"))
-    images = spark.createDataFrame(pd.DataFrame(rows))
-    pairs = similarity.cosine_neardup_pairs(
-        multimodal.embed_images(images), threshold=0.999, id_col="image_id")
-    return pairs.select("id_a", "id_b")
-
-
-def _q_ann_pq(spark, sf):
-    """Product-quantization ANN (ADC + exact rerank) — the memory-bound
-    scale path next to SRP-LSH and IVF. DuckDB-value-pinned: with a
-    generous ADC shortlist (20x topk over the small-sf corpus) the
-    exact rerank recovers the true top-k, so encode -> broadcast-LUT
-    ADC -> shortlist -> rerank must equal the SQL brute ranking.
-    Tight-shortlist recall stays pytest-gated."""
-    from irivermetrics_spark.operators import pq
-
-    em = _t(spark, sf, "embeddings")
-    # m=16 subquantizers: the synthetic embeddings are near-isotropic,
-    # so 8-byte codes rank the true top-5 only into ADC top-~190 at
-    # small sf — 16 bytes puts the worst true-5 ADC rank at <=61 vs a
-    # 120-deep shortlist (measured at sf0.001 and sf0.01)
-    books = pq.train_pq(em, m=16, k=64, sample=1024, iters=6)
-    q = em.filter(F.col("vec_id") % 100 == 7)
-    out = pq.pq_topk(em, q, books, topk=5, shortlist=24, round_to=6)
-    return out.select(
-        F.col("query_id").cast("bigint").alias("query_id"),
-        F.col("neighbor_id").cast("bigint").alias("neighbor_id"),
-        F.round("cosine", 4).alias("cosine"),
-        F.col("rank").cast("bigint").alias("rk"),
-    )
-
-
-def _q_ann_ivf_pq(spark, sf):
-    """Composed IVF-routing + PQ-scoring ANN — the documented
-    10^9-vector x 10^6-query path (route each query to nprobe inverted
-    lists, ADC-score m-byte codes only within those lists, exact-rerank
-    the shortlist). DuckDB-value-pinned in the provably exact
-    configuration: nprobe == n_lists makes the routed candidate pool
-    complete, and the m=16 / 24x-topk shortlist is the same geometry
-    ann_pq measured to contain the true top-5 on these embeddings, so
-    the composition must equal the SQL brute ranking. Partial-probe
-    recall + block-layout invariance stay pytest-gated
-    (tests/test_scale_ops.py)."""
-    from irivermetrics_spark.operators import ivf, pq
-
-    em = _t(spark, sf, "embeddings")
-    C = ivf.train_centroids(em, n_lists=8, sample=512, iters=6)
-    books = pq.train_pq(em, m=16, k=64, sample=1024, iters=6)
-    q = em.filter(F.col("vec_id") % 100 == 9)
-    out = pq.ivf_pq_topk(em, q, C, books, topk=5, nprobe=8, shortlist=24,
-                         round_to=6)
-    return out.select(
-        F.col("query_id").cast("bigint").alias("query_id"),
-        F.col("neighbor_id").cast("bigint").alias("neighbor_id"),
-        F.round("cosine", 4).alias("cosine"),
-        F.col("rank").cast("bigint").alias("rk"),
-    )
-
-
-def _q_multimodal_stats(spark, sf):
-    """Opaque-binary multimodal column handling, DuckDB-value-pinned:
-    per-image pixel data is GENERATED from a deterministic formula,
-    encoded with the real raw16 codec, then decoded + feature-extracted
-    inside the real mapInPandas kernel — while the oracle computes the
-    identical stats from pure SQL arithmetic over the same formula,
-    never touching bytes. Any corruption in encode/decode/stat shifts
-    the mean and breaks the hash. (The fixture-image variant with
-    phash verification stays pytest-covered, tests/test_multimodal.py.)"""
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    from irivermetrics_spark import codecs
-
-    from irivermetrics_spark.kernels import webp
-
-    NB, H, W = 3, 12, 17
-
-    def gen(k: int) -> np.ndarray:
-        b, y, x = np.meshgrid(np.arange(NB), np.arange(H), np.arange(W), indexing="ij")
-        return ((k * 7919 + b * 104729 + y * 131 + x * 17) % 20001).astype(np.uint16)
-
-    def gen8(k: int) -> np.ndarray:
-        b, y, x = np.meshgrid(np.arange(NB), np.arange(H), np.arange(W), indexing="ij")
-        return ((k * 7919 + b * 104729 + y * 131 + x * 17) % 256).astype(np.uint8)
-
-    rows = [dict(image_id=f"gen_{k}", fmt="raw16",
-                 bytes=codecs.encode_image(gen(k))) for k in range(10)]
-    # r5: five rows flow through the from-scratch VP8L codec (opaque
-    # alpha + the 8-bit formula), each exercising a different encoder/
-    # decoder path — predictor, color cache, palette
-    for k in range(10, 15):
-        rgb = gen8(k)
-        planes = np.concatenate([np.full((1, H, W), 255, dtype=np.uint8), rgb])
-        kw = ({"use_predictor": True, "block_bits": 3} if k % 3 == 0
-              else {"cache_bits": 5} if k % 3 == 1 else {"use_palette": True})
-        rows.append(dict(image_id=f"webp_{k}", fmt="webp",
-                         bytes=webp.encode_vp8l(planes, **kw)))
-    # r6: four LOSSY rows — the committed libwebp-encoded conformance
-    # fixtures flow through the real RFC 6386 decoder (kernels/vp8.py)
-    # inside the same kernel; the oracle pins each mean as exact
-    # integer-literal arithmetic derived from libwebp's own decode of
-    # the same bytes (tools/make_vp8_fixtures.py provenance), so any
-    # bitstream/loop-filter/upsample drift breaks the hash
-    fix_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                           "tests", "data")
-    for fname in ("vp8_art_q75", "vp8_synth_q75", "vp8_odd_q50", "vp8_python"):
-        with open(os.path.join(fix_dir, fname + ".webp"), "rb") as f:
-            rows.append(dict(image_id=fname, fmt="webp", bytes=f.read()))
-    images = spark.createDataFrame(pd.DataFrame(rows))
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for image_id, fmt, buf in zip(pdf["image_id"], pdf["fmt"], pdf["bytes"]):
-                if fmt == "webp":
-                    arr = webp.decode_webp_gray16(bytes(buf))
-                else:
-                    arr = codecs.decode_image(bytes(buf))
-                out.append(dict(
-                    image_id=image_id,
-                    mean_brightness=float(arr.mean()),
-                    band_count=int(arr.shape[0]),
-                    n_px=int(arr.size),
-                ))
-            yield pd.DataFrame(out)
-
-    stats = images.mapInPandas(
-        kernel, "image_id string, mean_brightness double, band_count int, n_px long")
-    return stats.select(
-        "image_id",
-        F.round("mean_brightness", 6).alias("mean_brightness"),
-        F.col("band_count").cast("bigint").alias("band_count"),
-        F.col("n_px").cast("bigint").alias("n_px"),
-    )
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Exactly 50 entries (the driver's CORRECTNESS gate checks the
-    first 50 — r2 shipped 56 and the last 6 got zero verification).
-    All 48 DuckDB-oracle-backed entries come first; the 2 rows-only
-    entries (full-raster/geometry/binary surfaces with no SQL form,
-    each numpy-parity pytested) close the list."""
+    """At most 50 entries (the driver's CORRECTNESS gate checks the
+    first 50). All 29 DuckDB-oracle-backed entries come first; the 2
+    rows-only entries (flagship metrics and vector exports, with no SQL
+    form, each numpy-parity pytested) close the list."""
     return {
         # ---- DuckDB-value-pinned (every key has an oracle_sql entry) ----
         "f1_clamp": _q_f1_clamp,
@@ -1808,84 +670,30 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "j3_left": _q_j3_left,
         "j6_fill": _q_j6_fill,
         "a1_persistence": _q_a1_persistence,
-        "html_text": _q_html_text,
-        "bpe_tokens": _q_bpe_tokens,
+        "a2_cond_avg": _q_a2_cond_avg,
+        "a3_cond_sum": _q_a3_cond_sum,
         "a4_ratio": _q_a4_ratio,
         "a7_fold": _q_a7_fold,
+        "a9_stats": _q_a9_stats,
         "w2_topk": _q_w2_topk,
-        "url_normalize": _q_url_normalize,
-        "c4_line_dedup": _q_c4_line_dedup,
+        "o2_rank": _q_o2_rank,
+        "u1_union": _q_u1_union,
         "c1_date_regex": _q_c1_date_regex,
-        "span_dedup": _q_span_dedup,
         "f9_having": _q_f9_having,
         "s1_uniform": _q_s1_uniform,
-        "ann_ivf_pq": _q_ann_ivf_pq,
         "p13_salted_agg": _q_p13_salted_agg,
-        "dedup_exact": _q_dedup_exact,
-        # dedup_clusters retired r7 (see _q_dedup_clusters /
-        # CLUSTERS_RETIRED_SQL) — resolver still green via dedup_pipeline
-        "exif_probe": _q_exif_probe,
-        "dedup_pipeline": _q_dedup_pipeline,
-        "dedup_minhash": _q_dedup_minhash,
-        "dedup_simhash": _q_dedup_simhash,
-        "text_quality": _q_text_quality,
-        "text_langid": _q_text_langid,
-        "text_chunks": _q_text_chunks,
-        "semdedup": _q_semdedup,
-        "ann_brute": _q_ann_brute,
-        "ann_ivf": _q_ann_ivf,
-        "ann_pq": _q_ann_pq,
-        "emb_neardup": _q_emb_neardup,
         "knn_pools": _q_knn_pools,
         "pixel_persistence_px": _q_pixel_persistence_px,
-        "text_fingerprint": _q_text_fingerprint,
         "dist_ccl": _q_dist_ccl,
-        "multimodal_stats": _q_multimodal_stats,
         "zonal_join_rows": _q_zonal_join_rows,
-        "multimodal_transform": _q_multimodal_transform,
-        "image_embed_neardup": _q_image_embed_neardup,
         "tile_assign_oracle": _q_tile_assign_oracle,
-        "text_pii": _q_text_pii,
-        "phash_neardup": _q_phash_neardup,
-        "text_repetition": _q_text_repetition,
+        "pip_oracle": _q_pip_oracle,
+        "haversine_oracle": _q_haversine_oracle,
         "pathlen_oracle": _q_pathlen_oracle,
         # ---- rows-only (no SQL form; numpy-parity pytested) ----
         "flagship_metrics": _q_flagship_metrics,
         "export_vectors": _q_export_vectors,
     }
-
-
-def _ann_brute_sql(query_pred: str, k: int = 5) -> str:
-    """Brute-force cosine top-k ranking in DuckDB — the shared oracle
-    for ann_brute (literally brute), ann_ivf (exhaustive-probe config)
-    and ann_pq (generous-shortlist config): in those configurations the
-    ANN paths provably return the true ranking, so the whole bucketed
-    machinery is value-pinned; approximate-recall behavior at tight
-    settings stays pytest-gated. Ranks on the 6-dp-rounded cosine with
-    id tie-break (cross-engine float determinism)."""
-    return f"""
-        WITH q AS (SELECT vec_id AS query_id, embedding AS qvec FROM embeddings WHERE {query_pred}),
-        scored AS (
-          SELECT q.query_id, e.vec_id AS neighbor_id,
-                 ROUND((
-                    SELECT SUM(CAST(a AS DOUBLE) * CAST(b AS DOUBLE))
-                    FROM (SELECT UNNEST(q.qvec) AS a, UNNEST(e.embedding) AS b)
-                 ) / (
-                    SQRT((SELECT SUM(CAST(a AS DOUBLE) * CAST(a AS DOUBLE)) FROM (SELECT UNNEST(q.qvec) AS a)))
-                    * SQRT((SELECT SUM(CAST(b AS DOUBLE) * CAST(b AS DOUBLE)) FROM (SELECT UNNEST(e.embedding) AS b)))
-                 ), 6) AS cos6
-          FROM embeddings e, q
-          WHERE e.vec_id <> q.query_id
-        )
-        SELECT CAST(query_id AS BIGINT) AS query_id,
-               CAST(neighbor_id AS BIGINT) AS neighbor_id,
-               ROUND(cos6, 4) AS cosine,
-               CAST(rk AS BIGINT) AS rk
-        FROM (
-          SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos6 DESC, neighbor_id ASC) AS rk
-          FROM scored
-        ) WHERE rk <= {k}
-    """
 
 
 def oracle_sql() -> dict[str, str]:
@@ -1985,26 +793,14 @@ def oracle_sql() -> dict[str, str]:
                    CAST(COUNT(*) AS BIGINT) AS n_events
             FROM events GROUP BY user_id
         """,
-        # a2_cond_avg retired r7 (see _q_a2_cond_avg / A2_RETIRED_SQL) —
-        # slot given to html_text
-        "html_text": """
-            SELECT CAST(doc_id AS BIGINT) AS doc_id,
-                   source || chr(10) || text || ' & more' AS extracted,
-                   CAST(2 AS BIGINT) AS blocks_kept,
-                   CAST(3 AS BIGINT) AS blocks_dropped
-            FROM documents
+        "a2_cond_avg": """
+            SELECT event_type, ROUND(AVG(CASE WHEN value > 50 THEN value END), 6) AS avg_above_50
+            FROM events GROUP BY event_type
         """,
-        # a3_cond_sum retired r7 (see _q_a3_cond_sum / A3_RETIRED_SQL) —
-        # slot given to bpe_tokens
-        "bpe_tokens": """
-            WITH base AS (
-              SELECT doc_id, CAST(doc_id % 9 + 1 AS INT) AS n
-              FROM documents ORDER BY doc_id LIMIT 30
-            )
-            SELECT CAST(doc_id AS BIGINT) AS doc_id,
-                   CAST(CEIL(n / 2.0) AS BIGINT) AS n_tokens,
-                   rtrim(repeat('257,', n // 2) || repeat('256,', n % 2), ',') AS ids_str
-            FROM base
+        "a3_cond_sum": """
+            SELECT event_type,
+                   ROUND(COALESCE(SUM(CASE WHEN value > 90 THEN value END), 0.0) * 1e-4, 6) AS ra_sum
+            FROM events GROUP BY event_type
         """,
         "a4_ratio": """
             SELECT strftime(ts, '%Y-%m-%d') AS day,
@@ -2020,6 +816,12 @@ def oracle_sql() -> dict[str, str]:
                    CAST(COUNT(*) AS BIGINT) AS npools_like
             FROM lineitem GROUP BY l_returnflag, l_linestatus
         """,
+        "a9_stats": """
+            SELECT c_nationkey,
+                   ROUND(AVG(c_acctbal), 4) AS avg_bal,
+                   ROUND(STDDEV_SAMP(c_acctbal), 4) AS sd_bal
+            FROM customer GROUP BY c_nationkey
+        """,
         "w2_topk": """
             SELECT CAST(o_custkey AS BIGINT) AS custkey,
                    CAST(o_orderkey AS BIGINT) AS orderkey,
@@ -2030,63 +832,19 @@ def oracle_sql() -> dict[str, str]:
               FROM orders
             ) WHERE rk <= 3
         """,
-        # o2_rank retired r7 (see _q_o2_rank / O2_RETIRED_SQL) — slot
-        # given to url_normalize
-        "url_normalize": """
-            SELECT CAST(doc_id AS BIGINT) AS doc_id,
-                   (doc_id % 5) != 3 AS valid,
-                   CASE doc_id % 5 WHEN 0 THEN 'http' WHEN 1 THEN 'https'
-                        WHEN 2 THEN 'ftp' WHEN 4 THEN 'http' END AS scheme,
-                   CASE doc_id % 5
-                        WHEN 0 THEN 'www.site' || (doc_id % 7) || '.com'
-                        WHEN 1 THEN 'shop' || (doc_id % 7) || '.example.co.uk'
-                        WHEN 2 THEN 'files.host' || (doc_id % 7) || '.org'
-                        WHEN 4 THEN 'bare.host' || (doc_id % 7) END AS host,
-                   CASE doc_id % 5
-                        WHEN 0 THEN 'site' || (doc_id % 7) || '.com'
-                        WHEN 1 THEN 'example.co.uk'
-                        WHEN 2 THEN 'host' || (doc_id % 7) || '.org'
-                        WHEN 4 THEN 'bare.host' || (doc_id % 7) END AS reg_domain,
-                   CASE doc_id % 5
-                        WHEN 0 THEN 'http://www.site' || (doc_id % 7) || '.com/A/'
-                                    || doc_id || '?a=' || (doc_id % 10) || '&b=2'
-                        WHEN 1 THEN 'https://shop' || (doc_id % 7)
-                                    || '.example.co.uk:8443/p?y=&z=9'
-                        WHEN 2 THEN 'ftp://files.host' || (doc_id % 7) || '.org/pub'
-                        WHEN 4 THEN 'http://bare.host' || (doc_id % 7) || '/' END AS url_norm
-            FROM documents
+        "o2_rank": """
+            SELECT CAST(s_suppkey AS BIGINT) AS suppkey,
+                   CAST(s_nationkey AS BIGINT) AS nationkey,
+                   CAST(DENSE_RANK() OVER (PARTITION BY s_nationkey ORDER BY s_acctbal DESC) AS BIGINT) AS bal_rank
+            FROM supplier
         """,
-        # u1_union retired r6 (see _q_u1_union / U1_RETIRED_SQL) — slot
-        # given to c4_line_dedup
-        "c4_line_dedup": """
-            WITH built AS (
-              SELECT CAST(doc_id AS BIGINT) AS doc_id,
-                     'nav ' || coalesce(source, '') || chr(10) || substr(coalesce(text, ''), 1, 60) || chr(10)
-                     || 'subscribe footer' || chr(10) || 'id ' || CAST(doc_id AS VARCHAR) AS text
-              FROM documents
-            ), lines AS (
-              SELECT doc_id, generate_subscripts(l, 1) AS pos, unnest(l) AS line
-              FROM (SELECT doc_id, regexp_split_to_array(text, '\r?\n') AS l FROM built)
-            ), norm AS (
-              SELECT doc_id, pos, line,
-                     regexp_replace(regexp_replace(line, '^[ \t\f\v\r]+', ''),
-                                    '[ \t\f\v\r]+$', '') AS nline
-              FROM lines
-            ), banned AS (
-              SELECT nline FROM norm WHERE nline <> ''
-              GROUP BY nline HAVING count(DISTINCT doc_id) >= 5
-            ), kept AS (
-              SELECT n.doc_id, n.pos, n.line FROM norm n
-              ANTI JOIN banned b ON n.nline = b.nline
-            ), rebuilt AS (
-              SELECT doc_id, string_agg(line, chr(10) ORDER BY pos) AS text,
-                     count(*) AS n_kept
-              FROM kept GROUP BY doc_id
+        "u1_union": """
+            WITH u AS (
+              SELECT c_custkey, c_nationkey FROM customer WHERE c_mktsegment = 'BUILDING'
+              UNION
+              SELECT c_custkey, c_nationkey FROM customer WHERE c_acctbal > 5000
             )
-            SELECT b.doc_id, md5(coalesce(r.text, '')) AS text_md5,
-                   CAST(len(regexp_split_to_array(b.text, '\r?\n'))
-                        - coalesce(r.n_kept, 0) AS INT) AS lines_removed
-            FROM built b LEFT JOIN rebuilt r USING (doc_id)
+            SELECT c_nationkey, CAST(COUNT(*) AS BIGINT) AS n_selected FROM u GROUP BY c_nationkey
         """,
         "c1_date_regex": """
             WITH s AS (
@@ -2096,35 +854,6 @@ def oracle_sql() -> dict[str, str]:
               FROM s
             )
             SELECT strftime(parsed, '%Y-%m') AS month, CAST(COUNT(*) AS BIGINT) AS n FROM p GROUP BY 1
-        """,
-        # c5_units retired r6 (see _q_c5_units) — slot given to span_dedup
-        "span_dedup": """
-            WITH base AS (
-              SELECT CAST(doc_id AS VARCHAR) AS doc_id, text FROM documents
-              UNION ALL
-              SELECT 'dup_' || CAST(doc_id AS VARCHAR) AS doc_id, text
-              FROM documents WHERE doc_id % 10 = 0
-            ),
-            toks AS (
-              SELECT doc_id,
-                     list_filter(string_split(text, ' '), x -> x <> '') AS t
-              FROM base
-            ),
-            w AS (
-              SELECT doc_id, CAST(i - 1 AS INTEGER) AS pos,
-                     array_to_string(t[i:i+7], ' ') AS win
-              FROM toks, UNNEST(generate_series(1, len(t) - 7)) AS u(i)
-            ),
-            r AS (
-              SELECT doc_id, pos,
-                     COUNT(*) OVER (PARTITION BY win) AS n_occ,
-                     ROW_NUMBER() OVER (PARTITION BY win
-                                        ORDER BY doc_id, pos) AS rn
-              FROM w
-            )
-            SELECT doc_id, pos, CAST(n_occ AS BIGINT) AS n_occ,
-                   rn = 1 AS keep
-            FROM r WHERE n_occ >= 2
         """,
         "f9_having": """
             WITH per AS (SELECT o_custkey, COUNT(*) AS n FROM orders GROUP BY o_custkey HAVING COUNT(*) >= 5)
@@ -2142,69 +871,6 @@ def oracle_sql() -> dict[str, str]:
                    ROUND(SUM(l_quantity), 4) AS sum_qty,
                    CAST(COUNT(*) AS BIGINT) AS n_rows
             FROM lineitem GROUP BY l_returnflag
-        """,
-        "dedup_exact": """
-            WITH u AS (
-              SELECT doc_id, text FROM documents
-              UNION ALL
-              SELECT doc_id + 1000000 AS doc_id, text FROM documents WHERE doc_id % 17 = 0
-            )
-            SELECT md5(text) AS text_md5,
-                   CAST(COUNT(*) AS BIGINT) AS n_copies,
-                   CAST(MIN(doc_id) AS BIGINT) AS keeper
-            FROM u GROUP BY md5(text) HAVING COUNT(*) > 1
-        """,
-        # dedup_clusters retired r7 (see CLUSTERS_RETIRED_SQL) — slot
-        # given to exif_probe; the oracle replays the EXIF writer's DMS
-        # quantization + the parser's division order exactly
-        "exif_probe": """
-            WITH g AS (
-              SELECT doc_id,
-                     CAST(1 + doc_id % 8 AS INTEGER) AS orientation,
-                     'Cam' || CAST(doc_id % 5 AS VARCHAR) AS make,
-                     'M-' || CAST(doc_id % 3 AS VARCHAR) AS model,
-                     '2020:01:' || lpad(CAST(doc_id % 28 + 1 AS VARCHAR), 2, '0')
-                       || ' ' || lpad(CAST(doc_id % 24 AS VARCHAR), 2, '0')
-                       || ':00:00' AS datetime_original,
-                     CASE WHEN doc_id % 2 = 0 THEN 1.0 ELSE -1.0 END AS slat,
-                     CASE WHEN doc_id % 3 = 0 THEN 1.0 ELSE -1.0 END AS slon,
-                     (doc_id % 88) + 1 AS dlat,
-                     (doc_id % 16) / 16.0 AS flat,
-                     (doc_id % 178) + 1 AS dlon,
-                     (doc_id % 32) / 32.0 AS flon
-              FROM documents
-            ), p AS (
-              SELECT *,
-                     trunc(flat * 60) AS mlat,
-                     trunc(flon * 60) AS mlon
-              FROM g
-            )
-            SELECT CAST(doc_id AS BIGINT) AS doc_id, orientation, make, model,
-                   datetime_original,
-                   ROUND(slat * (dlat + mlat/60.0 +
-                     (round((flat*60 - mlat)*60*10000)/10000.0)/3600.0), 6) AS gps_lat,
-                   ROUND(slon * (dlon + mlon/60.0 +
-                     (round((flon*60 - mlon)*60*10000)/10000.0)/3600.0), 6) AS gps_lon
-            FROM p
-        """,
-        "text_quality": """
-            SELECT lang, source,
-                   ROUND(AVG(len(string_split(text, ' '))), 6) AS avg_tokens,
-                   CAST(MAX(length(text)) AS BIGINT) AS max_chars,
-                   CAST(COUNT(*) AS BIGINT) AS n_docs
-            FROM documents GROUP BY lang, source
-        """,
-        "text_langid": """
-            WITH m AS (
-              SELECT source,
-                     ((length(text) - length(replace(text, ' the ', ''))) / 5.0
-                      + (length(text) - length(replace(text, ' and ', ''))) / 5.0
-                      + (length(text) - length(replace(text, ' of ', ''))) / 4.0
-                      + (length(text) - length(replace(text, ' a ', ''))) / 3.0
-                     ) * 100.0 / GREATEST(length(text), 1) AS score
-              FROM documents
-            )
-            SELECT source, ROUND(AVG(score), 6) AS avg_marker_score FROM m GROUP BY source
         """,
         "tile_assign_oracle": """
             WITH pts AS (
@@ -2241,7 +907,59 @@ def oracle_sql() -> dict[str, str]:
                    ROUND(SUM(x), 4) AS sum_x
             FROM packed GROUP BY cell
         """,
-        "text_pii": _text_pii_oracle_sql(),
+        "pip_oracle": """
+            WITH pts AS (
+              SELECT event_id, value * 0.27 AS x, (event_id % 101) * 1.01 AS y
+              FROM events WHERE value IS NOT NULL
+            ), edges(xa, ya, xb, yb) AS (
+              VALUES (0.3, 0.7, 120.4, 10.2),
+                     (120.4, 10.2, 60.1, 55.3),
+                     (60.1, 55.3, 110.7, 95.9),
+                     (110.7, 95.9, 5.2, 80.1),
+                     (5.2, 80.1, 0.3, 0.7)
+            ), hits AS (
+              -- crossing-number rule, exactly the engine's half-open
+              -- (ya>py)!=(yb>py) edges with strict px < xint
+              SELECT p.event_id, p.x,
+                     SUM(CASE WHEN ((e.ya > p.y) <> (e.yb > p.y))
+                               AND p.x < e.xa + (p.y - e.ya) * (e.xb - e.xa) / (e.yb - e.ya)
+                              THEN 1 ELSE 0 END) AS crossings
+              FROM pts p CROSS JOIN edges e
+              GROUP BY p.event_id, p.x
+            )
+            SELECT (crossings % 2 = 1) AS inside,
+                   CAST(COUNT(*) AS BIGINT) AS n_points,
+                   ROUND(SUM(x), 4) AS sum_x
+            FROM hits GROUP BY 1
+        """,
+        "haversine_oracle": """
+            WITH pts AS (
+              SELECT value * 11.3 AS x1, (event_id % 211) * 13.7 AS y1,
+                     value * 5.9 + 1500.0 AS x2, (event_id % 173) * 23.1 AS y2
+              FROM events WHERE value IS NOT NULL
+            ), ll AS (
+              SELECT 120.0 + x1 / (((pi() * 6371008.8) / 180.0) * cos(-18.0 * (pi() / 180.0))) AS lon1,
+                     -18.0 + y1 / ((pi() * 6371008.8) / 180.0) AS lat1,
+                     120.0 + x2 / (((pi() * 6371008.8) / 180.0) * cos(-18.0 * (pi() / 180.0))) AS lon2,
+                     -18.0 + y2 / ((pi() * 6371008.8) / 180.0) AS lat2
+              FROM pts
+            ), r AS (
+              SELECT lat1 * (pi() / 180.0) AS la1, lon1 * (pi() / 180.0) AS lo1,
+                     lat2 * (pi() / 180.0) AS la2, lon2 * (pi() / 180.0) AS lo2
+              FROM ll
+            ), d AS (
+              SELECT ROUND(2.0 * 6371008.8 * asin(sqrt(LEAST(GREATEST(
+                       sin((la2 - la1) / 2.0) * sin((la2 - la1) / 2.0)
+                       + (cos(la1) * cos(la2)) * (sin((lo2 - lo1) / 2.0) * sin((lo2 - lo1) / 2.0)),
+                     0.0), 1.0))), 4) AS dist_m
+              FROM r
+            )
+            SELECT CAST(COUNT(*) AS BIGINT) AS n_pairs,
+                   ROUND(AVG(dist_m), 4) AS avg_dist_m,
+                   ROUND(MAX(dist_m), 4) AS max_dist_m,
+                   ROUND(MIN(dist_m), 4) AS min_dist_m
+            FROM d
+        """,
         "pathlen_oracle": """
             WITH per AS (
               SELECT user_id, list(value ORDER BY ts, event_id, value) AS a
@@ -2251,163 +969,6 @@ def oracle_sql() -> dict[str, str]:
                    CAST(len(a) AS BIGINT) AS n_points,
                    ROUND(COALESCE(list_sum(list_transform(range(1, len(a)), i -> abs(a[i+1] - a[i]))), 0.0), 4) AS path_len
             FROM per
-        """,
-        # pip_oracle retired r6 (slot given to phash_neardup) — the
-        # crossing-number PIP rule stays hash-pinned with exact operand
-        # order inside zonal_join_rows; the standalone entry stays
-        # pytest-pinned against PIP_RETIRED_SQL (test_scale_ops.py)
-        "phash_neardup": _phash_neardup_sql(),
-        "text_repetition": """
-            WITH base AS (
-              SELECT doc_id, string_split(text, ' ') AS ws FROM documents
-            ), lined AS (
-              -- the entry's 2-word re-chunking (line joiner is irrelevant
-              -- here: the lines themselves are compared/counted)
-              SELECT doc_id,
-                     list_transform(range(0, CAST(ceil(len(ws) / 2.0) AS INT)),
-                                    i -> array_to_string(list_slice(ws, i * 2 + 1, i * 2 + 2), ' ')) AS ls,
-                     ws
-              FROM base
-            ), dup AS (
-              SELECT doc_id,
-                     list_filter(list_transform(ls, l -> trim(l)), l -> len(l) > 0) AS tl
-              FROM lined
-            ), dupf AS (
-              SELECT doc_id,
-                     CASE WHEN len(tl) > 1
-                          THEN ROUND(1.0 - CAST(len(list_distinct(tl)) AS DOUBLE) / len(tl), 6)
-                          ELSE 0.0 END AS dup_line_frac
-              FROM dup
-            ), words AS (
-              SELECT doc_id,
-                     list_filter(list_transform(ws, w -> lower(w)), w -> len(w) > 0) AS w2
-              FROM lined
-            ), grams AS (
-              SELECT doc_id, len(w2) - 1 AS total,
-                     unnest(list_transform(range(1, len(w2)), i -> w2[i] || ' ' || w2[i + 1])) AS gram
-              FROM words WHERE len(w2) >= 2
-            ), cnt AS (
-              SELECT doc_id, total, gram, COUNT(*) AS c
-              FROM grams GROUP BY doc_id, total, gram
-            ), top AS (
-              SELECT doc_id, ROUND(CAST(MAX(c) AS DOUBLE) / ANY_VALUE(total), 6) AS top_bigram_frac
-              FROM cnt GROUP BY doc_id
-            )
-            SELECT CAST(d.doc_id AS BIGINT) AS doc_id,
-                   f.dup_line_frac,
-                   COALESCE(t.top_bigram_frac, 0.0) AS top_bigram_frac
-            FROM documents d
-            JOIN dupf f ON d.doc_id = f.doc_id
-            LEFT JOIN top t ON d.doc_id = t.doc_id
-        """,
-        # text_tokens_bpe retired r7 (see _q_text_tokens_bpe /
-        # TOKENS_BPE_RETIRED_SQL) — superseded by the trained bpe_tokens
-        "text_chunks": r"""
-            WITH w AS (
-              SELECT doc_id,
-                     list_filter(string_split_regex(text, '\s+'),
-                                 x -> len(x) > 0) AS words
-              FROM documents
-            ), p AS (
-              SELECT doc_id, words, len(words) AS n,
-                     CAST(CEIL(GREATEST(len(words) - 16, 0) / 12.0) * 12 AS INT) AS last
-              FROM w WHERE len(words) > 0
-            )
-            SELECT CAST(p.doc_id AS BIGINT) AS doc_id,
-                   CAST(s // 12 AS BIGINT) AS chunk_idx,
-                   array_to_string(words[s + 1 : s + 16], ' ') AS chunk_text,
-                   CAST(LEAST(16, n - s) AS BIGINT) AS chunk_tokens
-            FROM p, UNNEST(range(0, last + 1, 12)) AS t(s)
-        """,
-        # text_langid_argmax retired r6 (slot given to semdedup) — the
-        # argmax tie-break semantics stay pytest-pinned
-        # (test_textops_dedup.py::test_langid_argmax_markers_and_ties)
-        # and the marker-score SQL family stays green via text_langid
-        "semdedup": """
-            WITH u AS (
-              SELECT vec_id, embedding FROM embeddings
-              UNION ALL
-              SELECT vec_id + 1000000, embedding FROM embeddings WHERE vec_id < 6
-              UNION ALL
-              SELECT vec_id + 2000000, embedding FROM embeddings WHERE vec_id < 3
-            ), pairs AS (
-              SELECT a.vec_id AS id_a, b.vec_id AS id_b
-              FROM u a JOIN u b ON a.vec_id < b.vec_id
-              WHERE ROUND((
-                      SELECT SUM(CAST(x AS DOUBLE) * CAST(y AS DOUBLE))
-                      FROM (SELECT UNNEST(a.embedding) AS x, UNNEST(b.embedding) AS y)
-                   ) / (
-                      SQRT((SELECT SUM(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)) FROM (SELECT UNNEST(a.embedding) AS x)))
-                      * SQRT((SELECT SUM(CAST(y AS DOUBLE) * CAST(y AS DOUBLE)) FROM (SELECT UNNEST(b.embedding) AS y)))
-                   ), 6) >= 0.95
-            )
-            -- the planted exact copies form cliques, so the min-id
-            -- keeper rule reduces to "has no smaller >=0.95 neighbor"
-            SELECT CAST(vec_id AS BIGINT) AS vec_id FROM u
-            WHERE vec_id NOT IN (SELECT id_b FROM pairs)
-        """,
-        "ann_brute": _ann_brute_sql("vec_id < 3"),
-        # ---- r3 conversions: formerly rows-only entries, now value-pinned ----
-        "dedup_minhash": """
-            WITH u AS (
-              SELECT doc_id, text FROM documents
-              UNION ALL
-              SELECT doc_id + 1000000, text FROM documents WHERE doc_id % 17 = 0
-              UNION ALL
-              SELECT doc_id + 2000000, upper(text) FROM documents WHERE doc_id % 23 = 0
-            ), n AS (
-              SELECT doc_id, md5(lower(regexp_replace(trim(text), '\\s+', ' ', 'g'))) AS h FROM u
-            )
-            SELECT CAST(a.doc_id AS BIGINT) AS id_a, CAST(b.doc_id AS BIGINT) AS id_b,
-                   1.0 AS est_jaccard, 1.0 AS jaccard
-            FROM n a JOIN n b ON a.h = b.h AND a.doc_id < b.doc_id
-        """,
-        "dedup_simhash": """
-            WITH u AS (
-              SELECT doc_id, text FROM documents
-              UNION ALL
-              SELECT doc_id + 4000000, text FROM documents WHERE doc_id % 19 = 0
-            ), n AS (
-              SELECT doc_id, md5(lower(regexp_replace(trim(text), '\\s+', ' ', 'g'))) AS h FROM u
-            )
-            SELECT CAST(a.doc_id AS BIGINT) AS id_a, CAST(b.doc_id AS BIGINT) AS id_b,
-                   CAST(0 AS BIGINT) AS hamming
-            FROM n a JOIN n b ON a.h = b.h AND a.doc_id < b.doc_id
-        """,
-        "dedup_pipeline": """
-            WITH u AS (
-              SELECT doc_id, text, lang FROM documents
-              UNION ALL
-              SELECT doc_id + 3000000, text, lang FROM documents WHERE doc_id % 11 = 0
-            ), n AS (
-              SELECT doc_id, lang, md5(lower(regexp_replace(trim(text), '\\s+', ' ', 'g'))) AS h FROM u
-            ), kept AS (
-              SELECT doc_id, lang FROM n
-              QUALIFY doc_id = MIN(doc_id) OVER (PARTITION BY h)
-            )
-            SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_kept_docs FROM kept GROUP BY lang
-        """,
-        "ann_ivf": _ann_brute_sql("vec_id % 100 = 5"),
-        "ann_pq": _ann_brute_sql("vec_id % 100 = 7"),
-        "ann_ivf_pq": _ann_brute_sql("vec_id % 100 = 9"),
-        "emb_neardup": """
-            WITH u AS (
-              SELECT vec_id, embedding FROM embeddings
-              UNION ALL
-              SELECT vec_id + 1000000, embedding FROM embeddings WHERE vec_id < 8
-            ), pairs AS (
-              SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-                     ROUND((
-                        SELECT SUM(CAST(x AS DOUBLE) * CAST(y AS DOUBLE))
-                        FROM (SELECT UNNEST(a.embedding) AS x, UNNEST(b.embedding) AS y)
-                     ) / (
-                        SQRT((SELECT SUM(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)) FROM (SELECT UNNEST(a.embedding) AS x)))
-                        * SQRT((SELECT SUM(CAST(y AS DOUBLE) * CAST(y AS DOUBLE)) FROM (SELECT UNNEST(b.embedding) AS y)))
-                     ), 6) AS cosine
-              FROM u a JOIN u b ON a.vec_id < b.vec_id
-            )
-            SELECT CAST(id_a AS BIGINT) AS id_a, CAST(id_b AS BIGINT) AS id_b, cosine
-            FROM pairs WHERE cosine >= 0.95
         """,
         "knn_pools": """
             WITH pts AS (
@@ -2433,38 +994,6 @@ def oracle_sql() -> dict[str, str]:
               SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY dist_m ASC, neighbor_id ASC) AS rank
               FROM d
             ) WHERE rank <= 3
-        """,
-        "multimodal_stats": """
-            WITH px AS (
-              SELECT k.range AS k,
-                     ((k.range * 7919 + b.range * 104729 + y.range * 131 + x.range * 17) % 20001) AS v
-              FROM range(10) k, range(3) b, range(12) y, range(17) x
-            ), px8 AS (
-              SELECT k.range AS k,
-                     ((k.range * 7919 + b.range * 104729 + y.range * 131 + x.range * 17) % 256) AS v
-              FROM range(10, 15) k, range(3) b, range(12) y, range(17) x
-            )
-            SELECT 'gen_' || CAST(k AS VARCHAR) AS image_id,
-                   ROUND(AVG(v), 6) AS mean_brightness,
-                   CAST(3 AS BIGINT) AS band_count,
-                   CAST(COUNT(*) AS BIGINT) AS n_px
-            FROM px GROUP BY k
-            UNION ALL
-            SELECT 'webp_' || CAST(k AS VARCHAR) AS image_id,
-                   ROUND(AVG(v), 6) AS mean_brightness,
-                   CAST(3 AS BIGINT) AS band_count,
-                   CAST(COUNT(*) AS BIGINT) AS n_px
-            FROM px8 GROUP BY k
-            UNION ALL
-            -- lossy-VP8 conformance rows: exact pixel sums from
-            -- libwebp's decode of the SAME committed fixture bytes
-            -- (independent reference; tools/make_vp8_fixtures.py)
-            SELECT * FROM (VALUES
-              ('vp8_art_q75',   ROUND(70789.0  / 768,   6), CAST(3 AS BIGINT), CAST(768   AS BIGINT)),
-              ('vp8_synth_q75', ROUND(981146.0 / 11520, 6), CAST(3 AS BIGINT), CAST(11520 AS BIGINT)),
-              ('vp8_odd_q50',   ROUND(434581.0 / 5100,  6), CAST(3 AS BIGINT), CAST(5100  AS BIGINT)),
-              ('vp8_python',    ROUND(109897.0 / 1024,  6), CAST(4 AS BIGINT), CAST(1024  AS BIGINT))
-            ) t(image_id, mean_brightness, band_count, n_px)
         """,
         # J1 membership predicate in pure SQL: crossing-number PIP
         # (engine edge rule: half-open (ya>py)!=(yb>py), strict px<xint)
@@ -2531,80 +1060,6 @@ def oracle_sql() -> dict[str, str]:
             WHERE ((t.crossings % 2) = 1)
                OR (t.touched AND t.cx >= b.xmin AND t.cx <= b.xmax
                              AND t.cy >= b.ymin AND t.cy <= b.ymax)
-        """,
-        # resized pixels follow the LINEAR generator through an exact
-        # 2x2 block mean (+10 = mean of 13*dy + 7*dx over the block);
-        # sampled frames keep every 4th index — both closed forms in
-        # range() arithmetic, like multimodal_stats
-        "multimodal_transform": """
-            WITH resize AS (
-              SELECT 'resize' AS kind,
-                     'gen_' || CAST(k.range AS VARCHAR) AS item_id,
-                     CAST(0 AS BIGINT) AS idx,
-                     CAST(16 AS BIGINT) AS w, CAST(12 AS BIGINT) AS h,
-                     ROUND(AVG(k.range * 101 + b.range * 1000
-                               + 13 * (2 * oy.range) + 7 * (2 * ox.range) + 10), 6) AS mean_val,
-                     CAST(SUM(k.range * 101 + b.range * 1000
-                              + 13 * (2 * oy.range) + 7 * (2 * ox.range) + 10) AS BIGINT) AS sum_val
-              FROM range(8) k, range(3) b, range(12) oy, range(16) ox
-              GROUP BY k.range
-            ), frames AS (
-              SELECT 'frame' AS kind,
-                     'v' || CAST(v.range AS VARCHAR) AS item_id,
-                     CAST(f.range AS BIGINT) AS idx,
-                     CAST(12 AS BIGINT) AS w, CAST(8 AS BIGINT) AS h,
-                     ROUND(AVG(v.range * 509 + f.range * 251 + b.range * 997
-                               + y.range * 13 + x.range * 7), 6) AS mean_val,
-                     CAST(SUM(v.range * 509 + f.range * 251 + b.range * 997
-                              + y.range * 13 + x.range * 7) AS BIGINT) AS sum_val
-              FROM range(3) v, range(10) f, range(2) b, range(8) y, range(12) x
-              WHERE f.range % 4 = 0
-              GROUP BY v.range, f.range
-            )
-            SELECT * FROM resize UNION ALL SELECT * FROM frames
-        """,
-        # pair MEMBERSHIP pin: the lossy twins of each textured family
-        # (raw16 / qlossy / jpeg-q95) — and nothing else — must pair;
-        # '_j' < '_q' < '_raw' is the lexicographic id order the
-        # pairing emits
-        "image_embed_neardup": """
-            WITH fams AS (
-              SELECT 'img' || CAST(k.range AS VARCHAR) AS f FROM range(6) k
-            )
-            SELECT f || '_j' AS id_a, f || '_q' AS id_b FROM fams
-            UNION ALL SELECT f || '_j', f || '_raw' FROM fams
-            UNION ALL SELECT f || '_q', f || '_raw' FROM fams
-        """,
-        # the 64-bit polynomial doc hash is pure fold arithmetic, so
-        # DuckDB can recompute it exactly: list_reduce over HUGEINT with
-        # the same base/mod (ASCII corpus: chars == utf-8 bytes)
-        "text_fingerprint": r"""
-            WITH u AS (
-              SELECT doc_id, text FROM documents
-              UNION ALL
-              SELECT doc_id + 2000000, regexp_replace(text, ' ', '  ', 'g')
-              FROM documents WHERE doc_id % 13 = 0
-            ), n AS (
-              SELECT doc_id, lower(regexp_replace(trim(text), '\s+', ' ', 'g')) AS t FROM u
-            ), h AS (
-              SELECT doc_id,
-                     list_reduce(
-                       [CAST(0 AS HUGEINT)] ||
-                       [CAST(ascii(c) AS HUGEINT)
-                        for c in list_filter(string_split_regex(t, ''), x -> x <> '')],
-                       (acc, b) -> (acc * 1000003 + b) % CAST('18446744073709551616' AS HUGEINT)
-                     ) AS hu
-              FROM n
-            ), fp AS (
-              SELECT doc_id,
-                     CAST(CASE WHEN hu >= CAST('9223372036854775808' AS HUGEINT)
-                          THEN hu - CAST('18446744073709551616' AS HUGEINT)
-                          ELSE hu END AS BIGINT) AS fingerprint
-              FROM h
-            )
-            SELECT fingerprint, CAST(COUNT(*) AS BIGINT) AS n,
-                   CAST(MIN(doc_id) AS BIGINT) AS keeper
-            FROM fp GROUP BY fingerprint HAVING COUNT(*) > 1
         """,
         "dist_ccl": """
             WITH RECURSIVE pts AS (

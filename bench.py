@@ -54,8 +54,6 @@ def sf_of(path: str) -> float:
 
 
 def main() -> None:
-    from pyspark.sql import functions as F
-
     import __spark_entry__ as entrymod
     from irivermetrics_spark import synth
     from irivermetrics_spark.plans import pipeline
@@ -102,52 +100,9 @@ def main() -> None:
     images_per_sec = n_images / flagship_sec
 
     # ---- relational headliners on the sf tables ----
-    qs = dict(entrymod.queries())
-
-    # keep the benchmarked minhash workload identical across rounds: the
-    # r3 driver entry added salted-dup unions + normalization joins for
-    # the DuckDB oracle, which would skew the cross-round Δ table — the
-    # bench measures the raw production operator shape (candidates +
-    # exact-Jaccard verify at 0.5 over the unmodified corpus, as in r1/r2)
-    def _bench_dedup_minhash(spark, sf_dir):
-        from irivermetrics_spark.operators import dedup
-
-        d = entrymod._t(spark, sf_dir, "documents")
-        cand = dedup.lsh_candidates(d, "doc_id", "text")
-        # broadcast_shingles default (python dict over Arrow-collected
-        # sets): with the candidate frame UNPERSISTED — the bench shape —
-        # the all-JVM array_intersect variant measured 12 s here (the
-        # shingle joins re-plan the banded self-join), vs 2.6-4.4 s for
-        # the dict path; see the r6 profile table in PLANS.md
-        return dedup.exact_jaccard_pairs(d, cand).filter(F.col("jaccard") >= 0.5)
-
-    qs["dedup_minhash"] = _bench_dedup_minhash
-
-    # r6-late additions appended AFTER the pinned r1-r5 keys so the
-    # judge's cross-round Δ table stays comparable: corpus boilerplate
-    # line dedup and the chunk -> shuffle -> shard shipping tail
-    def _bench_c4_line_dedup(spark, sf_dir):
-        from irivermetrics_spark.operators import textops
-
-        d = entrymod._t(spark, sf_dir, "documents").select("doc_id", "text")
-        return textops.remove_repeated_lines(d, min_df=25)
-
-    def _bench_chunk_shard(spark, sf_dir):
-        from irivermetrics_spark.operators import sharding, textops
-
-        d = entrymod._t(spark, sf_dir, "documents").select("doc_id", "text")
-        chunks = textops.chunk_documents(d, max_tokens=128, overlap=16)
-        cid = F.concat_ws("#", "doc_id", "chunk_idx")
-        return sharding.shard_assignments(
-            chunks.withColumn("chunk_id", cid), n_shards=64,
-            id_col="chunk_id")
-
-    qs["c4_line_dedup_raw"] = _bench_c4_line_dedup
-    qs["chunk_shard"] = _bench_chunk_shard
+    qs = entrymod.queries()
     rel_names = [] if os.environ.get("SPARK_GRAFT_FLAGSHIP_ONLY") else [
-        "j1_star", "a7_fold", "w2_topk", "j6_fill", "f6_validity",
-        "dedup_exact", "dedup_minhash", "ann_brute", "text_quality",
-        "c4_line_dedup_raw", "chunk_shard"]
+        "j1_star", "a7_fold", "w2_topk", "j6_fill", "f6_validity"]
     # relational queries are best-of-2 for the same CPU-steal reason as
     # the flagship; run-1 times are reported alongside for transparency
     run1: dict[str, float] = {}

@@ -16,7 +16,7 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from irivermetrics_spark.kernels import zipfmt
+from irivermetrics_offpaper.kernels import zipfmt
 
 _MEMBER_SCHEMA = ("archive_path string, name string, bytes binary, "
                   "size bigint, method int, error string")

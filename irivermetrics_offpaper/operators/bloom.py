@@ -162,7 +162,7 @@ def with_bloom_membership(docs: DataFrame, bloom: BloomFilter,
         # Arrow batch would dominate the probe. Keyed by identity WITH
         # the object held (an id() alone can alias a recycled address
         # in a reused worker — r5 lesson)
-        from irivermetrics_spark.operators import bloom as _mod
+        from irivermetrics_offpaper.operators import bloom as _mod
 
         blob = bc.value
         memo = _mod._PROBE_MEMO

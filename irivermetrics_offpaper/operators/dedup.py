@@ -420,7 +420,7 @@ def cluster_duplicates(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
     and the cluster id comes back as min ORIGINAL id per component —
     same keeper semantics, same return schema, fully distributed.
     """
-    from .distccl import resolve_components
+    from irivermetrics_spark.operators.distccl import resolve_components
 
     if dict(pairs.dtypes)[id_a] in _NUMERIC_ID_TYPES:
         edges = pairs.select(F.lit("g").alias("g"), F.col(id_a).cast("long").alias("la"),

@@ -29,7 +29,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .. import codecs
+from irivermetrics_spark import codecs
+
+from .. import mediacodecs
 
 RESIZED_SCHEMA = "image_id string, bytes binary, w int, h int, fmt string"
 FRAMES_SCHEMA = "video_id string, frame_idx int, bytes binary, w int, h int, fmt string"
@@ -87,10 +89,10 @@ def with_format_detail(images: DataFrame, bytes_col: str = "bytes") -> DataFrame
 
     @F.pandas_udf("string")
     def sniff(bufs: pd.Series) -> pd.Series:
-        return pd.Series([codecs.sniff_format(b) for b in bufs])
+        return pd.Series([mediacodecs.sniff_format(b) for b in bufs])
 
     out = images.withColumn("fmt_detail", sniff(bytes_col))
-    dec = F.col("fmt_detail").isin(*sorted(codecs.DECODABLE_DETAILS))
+    dec = F.col("fmt_detail").isin(*sorted(mediacodecs.DECODABLE_DETAILS))
     return out.withColumn("decodable", dec)
 
 
@@ -101,7 +103,7 @@ IMAGE_INFO_SCHEMA = ("fmt_detail string, width int, height int, nbands int, "
 def with_image_info(images: DataFrame, bytes_col: str = "bytes") -> DataFrame:
     """Adds header-only metadata columns (``fmt_detail``, ``width``,
     ``height``, ``nbands``, ``n_frames``, ``decodable``) via
-    codecs.probe_image_info — the resolution/band/frame-count
+    mediacodecs.probe_image_info — the resolution/band/frame-count
     inventory a crawl table filters on BEFORE paying decode cost
     (e.g. ``width >= 256 AND n_frames = 1``). Fixed headers only —
     O(bytes-read) per row is tens of bytes, not the payload — so the
@@ -113,7 +115,7 @@ def with_image_info(images: DataFrame, bytes_col: str = "bytes") -> DataFrame:
 
     @F.pandas_udf(f"struct<{IMAGE_INFO_SCHEMA}>")
     def probe(bufs: pd.Series) -> pd.DataFrame:
-        return pd.DataFrame([codecs.probe_image_info(b) for b in bufs])
+        return pd.DataFrame([mediacodecs.probe_image_info(b) for b in bufs])
 
     out = images.withColumn("_info", probe(bytes_col))
     for field in ("fmt_detail", "width", "height", "nbands", "n_frames", "decodable"):
@@ -138,7 +140,7 @@ def with_exif(images: DataFrame, bytes_col: str = "bytes") -> DataFrame:
     set ``exif_error`` instead of failing the task."""
     from pyspark.sql import functions as F
 
-    from irivermetrics_spark.kernels import exif as exifk
+    from irivermetrics_offpaper.kernels import exif as exifk
 
     @F.pandas_udf(f"struct<{EXIF_INFO_SCHEMA}>")
     def probe(bufs: pd.Series) -> pd.DataFrame:
@@ -246,7 +248,7 @@ def resize_images(images: DataFrame, out_w: int, out_h: int,
     schema = RESIZED_SCHEMA + (", error string" if quarantine else "")
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from irivermetrics_spark.kernels import exif as exifk
+        from irivermetrics_offpaper.kernels import exif as exifk
 
         for pdf in batches:
             rows = []
@@ -275,7 +277,7 @@ def resize_images(images: DataFrame, out_w: int, out_h: int,
                     if not quarantine:
                         raise
                     row = dict(image_id=rec.image_id, bytes=None, w=-1, h=-1,
-                               fmt=codecs.sniff_format(raw),
+                               fmt=mediacodecs.sniff_format(raw),
                                error=f"{type(e).__name__}: {e}")
                 rows.append(row)
             yield pd.DataFrame(rows) if rows else pd.DataFrame(
@@ -317,7 +319,7 @@ def frame_sample(videos: DataFrame, every_k: int = 5,
             rows = []
             for rec in pdf.itertuples(index=False):
                 buf = bytes(rec.bytes)
-                sniffed = codecs.sniff_format(buf)
+                sniffed = mediacodecs.sniff_format(buf)
                 if sniffed == "webp-vp8x-anim":
                     from ..kernels import webpanim
 
@@ -715,7 +717,7 @@ def audio_features(audio: DataFrame, raw_rate: int = 16_000,
             for rec in pdf.itertuples(index=False):
                 try:
                     buf = b"" if rec.bytes is None else bytes(rec.bytes)
-                    if codecs.sniff_format(buf) == "wav":
+                    if mediacodecs.sniff_format(buf) == "wav":
                         samples, rate, bits = wavk.read_wav(buf)
                     else:
                         samples = np.frombuffer(

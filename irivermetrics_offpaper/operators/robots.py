@@ -190,7 +190,7 @@ def filter_by_robots(urls: DataFrame, robots: DataFrame, user_agent: str,
     ``broadcast_rules=True`` hints the broadcast when the host
     dimension fits — and decided in a single Arrow kernel with a
     per-worker compiled-pattern memo."""
-    from irivermetrics_spark.operators import urlops
+    from irivermetrics_offpaper.operators import urlops
 
     clash = {"_rules", "_rb_host", "_rb_path", "_rb_rhost",
              "robots_allowed"} & set(urls.columns)

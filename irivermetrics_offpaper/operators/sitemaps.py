@@ -66,7 +66,7 @@ def _decode_xml_text(s: str) -> str:
     # digit caps, 0x10FFFF bound and the lone-surrogate guard live
     # there; a weaker local copy once crashed Arrow serialization on
     # &#55296;)
-    from irivermetrics_spark.operators.htmltext import _decode_entities
+    from irivermetrics_offpaper.operators.htmltext import _decode_entities
 
     s = s.strip()
     if s.startswith("<![CDATA[") and s.endswith("]]>"):
@@ -90,7 +90,7 @@ def parse_sitemap(body) -> dict:
                 # the warc kernel's member walk: multi-member gzip
                 # (cat'd / block-gzip output) decodes FULLY — a single
                 # decompressobj pass silently drops unused_data
-                from irivermetrics_spark.kernels import warc as warck
+                from irivermetrics_offpaper.kernels import warc as warck
 
                 try:
                     parts = list(warck.iter_gzip_members(b, cap=_MAX_BODY + 1))
@@ -181,7 +181,7 @@ def coverage_gaps(urls: DataFrame, sitemap_entries: DataFrame,
     the publisher-declared pages the crawl is missing. Normalizes the
     loc with the same urlops canonicalization the URL table uses, so
     the anti-join compares like with like; one shuffle."""
-    from irivermetrics_spark.operators import urlops
+    from irivermetrics_offpaper.operators import urlops
 
     ent = (sitemap_entries
            .where(F.col("loc").isNotNull() & (F.col("kind") == "urlset"))

@@ -270,7 +270,7 @@ def cap_per_domain(df: DataFrame, cap: int, url_col: str = "url",
     textops.cap_per_key (which auto-pre-thins hot domains) over the
     extracted registered domain; rows with no parseable domain pass
     through uncapped."""
-    from irivermetrics_spark.operators import textops
+    from irivermetrics_offpaper.operators import textops
 
     tagged = df.select(
         "*", registered_domain(F.when(url_valid(F.col(url_col)), url_host(F.col(url_col))))

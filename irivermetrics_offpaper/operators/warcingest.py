@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (BinaryType, IntegerType, LongType, StringType,
                                StructField, StructType)
 
-from irivermetrics_spark.kernels import warc as warck
+from irivermetrics_offpaper.kernels import warc as warck
 
 RECORD_SCHEMA = StructType([
     StructField("warc_file", StringType()),

@@ -33,8 +33,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from irivermetrics_spark.kernels import tar as tark
-from irivermetrics_spark.operators import sharding
+from irivermetrics_offpaper.kernels import tar as tark
+from irivermetrics_offpaper.operators import sharding
 
 _MANIFEST_SCHEMA = "shard int, path string, n_samples bigint, n_bytes bigint"
 _MEMBER_SCHEMA = ("shard_path string, key string, ext string, "

@@ -135,87 +135,6 @@ def decode_image(buf: bytes, reflectance_scale: bool | None = None) -> np.ndarra
     return out
 
 
-def sniff_format(buf: bytes) -> str:
-    """Magic-byte format detail for an opaque image payload.
-
-    The quarantine router's first stage (r5 VERDICT missing #1):
-    payloads the engine has no codec for (gif/bmp/garbage) must be
-    DIVERTED, not fail the task. RIFF containers are discriminated by
-    chunk tag ('VP8L' lossless vs 'VP8 ' lossy vs 'VP8X' extended —
-    the VP8X flags byte further splits still images from animations,
-    which route through kernels/webpanim), the engine container by its
-    format code. Never raises; unknown bytes tag 'unknown'."""
-    b = bytes(buf[:34]) if buf is not None else b""
-    if b[:4] == MAGIC:
-        return _FMT_NAME.get(b[4], "irm-unknown") if len(b) > 4 else "irm-unknown"
-    if b[:4] in (b"II*\x00", b"MM\x00*"):
-        return "tiff"
-    if b[:3] == b"\xff\xd8\xff":
-        return "jpeg"
-    if b[:8] == b"\x89PNG\r\n\x1a\n":
-        return "png"
-    if b[:4] == b"RIFF" and b[8:12] == b"WEBP":
-        tag = b[12:16]
-        if tag == b"VP8L":
-            return "webp-vp8l"
-        if tag == b"VP8 ":
-            return "webp-vp8"
-        if tag == b"VP8X":
-            # flags byte (offset 20): bit 0x02 = animation — a still
-            # extended container (alpha/ICC/EXIF) decodes, an ANIM
-            # chain does not
-            if len(b) > 20 and b[20] & 0x02:
-                return "webp-vp8x-anim"
-            return "webp-vp8x"
-        return "webp-unknown"
-    if b[:4] == b"RIFF" and b[8:12] == b"WAVE":
-        return "wav"  # audio payload in an image column: divert, don't fail
-    if b[:4] == b"fLaC":
-        return "flac"
-    if b[:3] == b"ID3" and len(b) > 9 and b[3] != 0xFF and b[4] != 0xFF:
-        # ID3v2-tagged audio — almost always mp3 (an id3-prefixed flac
-        # resolves precisely in probe_audio_info, which sees past the
-        # tag; either way the payload diverts out of the image path)
-        return "mp3"
-    if len(b) >= 4 and b[0] == 0xFF and (b[1] & 0xE0) == 0xE0:
-        from .kernels.audioprobe import _parse_mp3_header
-
-        if _parse_mp3_header(b, 0) is not None:
-            return "mp3"
-    if b[:6] in (b"GIF87a", b"GIF89a"):
-        return "gif"
-    if b[:2] == b"BM":
-        # decodable only when the DIB variant matches kernels/bmp.py:
-        # BI_RGB (compression 0) at 8/24/32 bpp or BI_RLE8 at 8 bpp —
-        # BITFIELDS and 1/4/16-bpp files divert instead of failing the
-        # decode stage
-        if len(b) >= 34:
-            bpp = b[28] | (b[29] << 8)
-            comp = b[30] | (b[31] << 8) | (b[32] << 16) | (b[33] << 24)
-            top_down = b[25] >= 0x80  # height int32 sign byte
-            if (comp == 0 and bpp in (8, 24, 32)) or (
-                    comp == 1 and bpp == 8 and not top_down):
-                return "bmp"  # RLE8 is defined bottom-up only
-        return "bmp-unsupported"
-    if b[:3] == b"CDF":
-        return "netcdf3"
-    return "unknown"
-
-
-# format details the engine's from-scratch codecs actually decode
-# (multimodal._decode_any + codecs.decode_image routing); lossy VP8
-# joined in r6 via the RFC 6386 keyframe decoder (kernels/vp8.py),
-# animated webp via the ANMF compositor (kernels/webpanim.py: first
-# frame for still consumers, every frame for frame_sample), and late
-# r6 closed gif (kernels/gif.py: GIF-variant LZW, interlace, local
-# palettes) and bmp (kernels/bmp.py: 8/24/32-bit BI_RGB) — the last
-# diverted web-image formats. Audio ('wav') stays out: it is not an
-# image and routes to audio_features instead
-DECODABLE_DETAILS = frozenset(
-    {FMT_RAW16, FMT_QLOSSY, "tiff", "jpeg", "png", "gif", "bmp",
-     "webp-vp8l", "webp-vp8", "webp-vp8x", "webp-vp8x-anim"})
-
-
 def psnr(a: np.ndarray, b: np.ndarray, peak: float = float(REFLECTANCE_MAX)) -> float:
     """Peak signal-to-noise ratio in dB; inf when identical."""
     diff = a.astype(np.float64) - b.astype(np.float64)
@@ -248,141 +167,3 @@ def phash64(arr: np.ndarray) -> int:
     # reinterpret as signed for Spark LongType
     return int(np.int64(val))
 
-
-def probe_image_info(buf: bytes) -> dict:
-    """Header-only metadata probe: (fmt_detail, width, height, nbands,
-    n_frames, decodable) without decoding a single pixel.
-
-    The curation pre-pass for a 100 TB image table: resolution /
-    band-count / frame-count filters must not pay full decode cost, so
-    this reads only magic bytes + fixed headers (TIFF walks the first
-    IFD, animated webp walks chunk HEADERS to count ANMF frames —
-    still O(chunks), never O(pixels)). Never raises: corrupt or
-    foreign payloads come back with ``fmt_detail`` set and the shape
-    fields None, matching the quarantine router's divert-don't-fail
-    contract (sniff_format). Works for formats the engine can't decode
-    (e.g. 'bmp-unsupported' RLE variants), so even quarantined rows can be
-    inventoried.
-    """
-    import struct
-
-    fmt = sniff_format(buf)
-    b = bytes(buf) if buf is not None else b""
-    # the engine video container (u4 frame count + concatenated IRM1
-    # frames) is invisible to sniff_format on purpose — videos must
-    # not image-decode — but the INVENTORY should still see it. The
-    # offset-4 magic decides ALONE (checked before trusting the sniff):
-    # a frame count whose little-endian bytes spell another format's
-    # magic ('BM', 'II*\0', 'CDF'...) must not be misread as that
-    # format with garbage dimensions. A genuine IRM1 image cannot
-    # collide: its own magic sits at offset 0.
-    if b[:4] != MAGIC and len(b) >= 14 and b[4:8] == MAGIC:
-        import struct as _s
-
-        (nf,) = _s.unpack("<I", b[:4])
-        nbands = b[9]
-        w, h = _s.unpack("<HH", b[10:14])
-        return dict(fmt_detail="irm-video", width=w, height=h, nbands=nbands,
-                    n_frames=nf, decodable=False)
-    out = dict(fmt_detail=fmt, width=None, height=None, nbands=None,
-               n_frames=None, decodable=fmt in DECODABLE_DETAILS)
-    try:
-        if fmt in (FMT_RAW16, FMT_QLOSSY) and len(b) >= 10:
-            nbands = b[5]
-            w, h = struct.unpack("<HH", b[6:10])
-            out.update(width=w, height=h, nbands=nbands, n_frames=1)
-        elif fmt == "tiff":
-            endian = "<" if b[:2] == b"II" else ">"
-            (ifd_off,) = struct.unpack(endian + "I", b[4:8])
-            (n,) = struct.unpack(endian + "H", b[ifd_off:ifd_off + 2])
-            tags = {}
-            for i in range(n):
-                off = ifd_off + 2 + i * 12
-                t, typ, count = struct.unpack(endian + "HHI", b[off:off + 8])
-                if t in (256, 257, 277) and count == 1:
-                    if typ == 3:  # SHORT
-                        tags[t] = struct.unpack(endian + "H", b[off + 8:off + 10])[0]
-                    elif typ == 4:  # LONG
-                        tags[t] = struct.unpack(endian + "I", b[off + 8:off + 12])[0]
-            out.update(width=tags.get(256), height=tags.get(257),
-                       nbands=tags.get(277, 1), n_frames=1)
-        elif fmt == "jpeg":
-            # walk marker segments to the first SOF (baseline/extended/
-            # progressive); segment lengths keep this O(markers)
-            i = 2
-            while i + 4 <= len(b):
-                if b[i] != 0xFF:
-                    break
-                marker = b[i + 1]
-                if marker in (0xC0, 0xC1, 0xC2):
-                    h, w = struct.unpack(">HH", b[i + 5:i + 9])
-                    out.update(width=w, height=h, nbands=b[i + 9], n_frames=1)
-                    break
-                if marker == 0xD8 or 0xD0 <= marker <= 0xD7:
-                    i += 2
-                    continue
-                (seg,) = struct.unpack(">H", b[i + 2:i + 4])
-                i += 2 + seg
-        elif fmt == "png":
-            w, h = struct.unpack(">II", b[16:24])
-            color_type = b[25]
-            if color_type == 3:
-                # palette images DECODE to RGB (RGBA with tRNS) — report
-                # the decoded band count, not the 1 stored index plane;
-                # tRNS lives in the chunk headers before IDAT (O(chunks))
-                channels, i = 3, 8
-                while i + 8 <= len(b):
-                    (clen,) = struct.unpack(">I", b[i:i + 4])
-                    ctag = b[i + 4:i + 8]
-                    if ctag == b"tRNS":
-                        channels = 4
-                        break
-                    if ctag == b"IDAT" or ctag == b"IEND":
-                        break
-                    i += 12 + clen
-            else:
-                channels = {0: 1, 2: 3, 4: 2, 6: 4}.get(color_type)
-            out.update(width=w, height=h, nbands=channels, n_frames=1)
-        elif fmt == "webp-vp8l":
-            if b[20] == 0x2F:
-                (v,) = struct.unpack("<I", b[21:25])
-                out.update(width=(v & 0x3FFF) + 1, height=((v >> 14) & 0x3FFF) + 1,
-                           nbands=4 if (v >> 28) & 1 else 3, n_frames=1)
-        elif fmt == "webp-vp8":
-            if b[23:26] == b"\x9d\x01\x2a":
-                w, h = struct.unpack("<HH", b[26:30])
-                out.update(width=w & 0x3FFF, height=h & 0x3FFF, nbands=3, n_frames=1)
-        elif fmt in ("webp-vp8x", "webp-vp8x-anim"):
-            wm1 = int.from_bytes(b[24:27], "little")
-            hm1 = int.from_bytes(b[27:30], "little")
-            alpha = bool(b[20] & 0x10)
-            frames = 1
-            if fmt == "webp-vp8x-anim":
-                # count ANMF chunk headers (payloads skipped via size)
-                frames, i = 0, 30
-                while i + 8 <= len(b):
-                    tag, size = b[i:i + 4], struct.unpack("<I", b[i + 4:i + 8])[0]
-                    if tag == b"ANMF":
-                        frames += 1
-                    i += 8 + size + (size & 1)
-            out.update(width=wm1 + 1, height=hm1 + 1,
-                       nbands=4 if alpha else 3, n_frames=frames)
-        elif fmt == "gif":
-            w, h = struct.unpack("<HH", b[6:10])
-            out.update(width=w, height=h, nbands=3)
-            try:
-                from .kernels import gif as _gif
-
-                out.update(n_frames=_gif.count_images(b))
-            except Exception:
-                pass  # block walk failed (truncated tail): shape stands
-        elif fmt.startswith("bmp"):
-            w, h = struct.unpack("<ii", b[18:26])
-            # decode_bmp always returns 3 bands (palette expanded,
-            # alpha dropped) — the probe must match what decode yields
-            out.update(width=w, height=abs(h),
-                       nbands=3 if fmt == "bmp" else None, n_frames=1)
-    except (struct.error, IndexError):
-        # truncated header: keep fmt_detail, leave the shape fields None
-        out.update(width=None, height=None, nbands=None, n_frames=None)
-    return out

@@ -9,9 +9,8 @@ change" quirk — the code width bumps one code EARLIER than the table
 size would suggest (at 510/1022/2046 after a clear).
 
 Both directions are sequential dictionary algorithms (inherently so);
-this is a correctness/interop seam like kernels/jpeg.py's Huffman
-loop — bulk raster traffic at scale stays on the uncompressed or
-parquet paths.
+this is a correctness/interop seam — bulk raster traffic at scale
+stays on the uncompressed or parquet paths.
 """
 
 from __future__ import annotations

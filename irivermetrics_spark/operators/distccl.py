@@ -113,8 +113,7 @@ def resolve_components(edges: DataFrame, key_cols: list[str],
     Returns a (keys..., glabel, component) DataFrame. Small graphs
     (<= edge_limit edges AND <= ~100 MB estimated) resolve with a
     driver union-find; larger ones switch to the distributed min-label
-    propagation. Used by the cross-tile CCL stitch AND the dedup
-    pair-clustering operator.
+    propagation. Used by the cross-tile CCL stitch.
 
     The byte guard (r3 VERDICT wrong #4) makes the driver collect
     row-size-aware: the per-row width is estimated from a bounded

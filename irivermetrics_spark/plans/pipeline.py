@@ -212,6 +212,12 @@ def run(
     # observation below needs corridor_total before the mask write runs
     corridor_cover = zonal.corridor_cover_df(spark, reaches, res)
     corridor_total = fillop.corridor_pixel_count(spark, corridor_cover, reaches, grid, res)
+    if corridor_total == 0:
+        # the F6 ratio divides by this; fail here, not deep in a Spark job
+        x0, y1, ps = grid["gx0"], grid["gy0"], grid["ps"]
+        raise ValueError(
+            f"no reach covers a pixel of the grid (x {x0}..{x0 + grid['w'] * ps}, "
+            f"y {y1 - grid['h'] * ps}..{y1}); check the reaches' CRS and extent")
     invalid_offset = 0
     if aoi is not None:
         # AOI-clipped masks: corridor pixels outside the module-1 buffer

@@ -15,9 +15,6 @@ production shape is therefore the canonical two-layer pattern:
    output equals the batch pipeline run on the same accumulated input
    BY CONSTRUCTION, and checkpointing makes restarts resume without
    reprocessing or double-counting (tests kill between batches).
-
-``stream_wet_area`` (stateful.py) remains the pure-streaming pre-fill
-aggregate for monitoring; THIS module is the correct-answer path.
 """
 
 from __future__ import annotations

@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from irivermetrics_spark import codecs
 from irivermetrics_spark.kernels import geotiff, netcdf
-from irivermetrics_spark.operators import dedup
+from irivermetrics_offpaper.operators import dedup
 
 
 def test_netcdf_uint8_overflow_raises():

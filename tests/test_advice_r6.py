@@ -7,7 +7,7 @@ r5 advisor computed by hand against libwebp/RFC 9649 semantics.
 
 import numpy as np
 
-from irivermetrics_spark.kernels import webp
+from irivermetrics_offpaper.kernels import webp
 
 
 def _pix(a=255, r=0, g=0, b=0):
@@ -62,7 +62,7 @@ def test_single_symbol_code_length_stream_roundtrips():
 
 def test_pq_rerank_gate_is_byte_based():
     # the gate must price full float64 query vectors, not count rows
-    from irivermetrics_spark.operators.dedup import BROADCAST_BUDGET_BYTES
+    from irivermetrics_offpaper.operators.dedup import BROADCAST_BUDGET_BYTES
     nq, m, dsub = 2_000_000, 16, 48  # 768-dim -> ~12 GB payload
     assert nq * (m * dsub * 8 + 8) > BROADCAST_BUDGET_BYTES
     nq_small = 10_000

@@ -5,8 +5,8 @@ and the sniff_format router tags."""
 import numpy as np
 import pytest
 
-from irivermetrics_spark import codecs
-from irivermetrics_spark.kernels import audioprobe, wav as wavk
+from irivermetrics_offpaper import mediacodecs
+from irivermetrics_offpaper.kernels import audioprobe, wav as wavk
 
 
 # --------------------------------------------------------- constructors
@@ -155,11 +155,11 @@ def test_fuzz_never_raises():
 # ------------------------------------------------------------- routing
 
 def test_sniff_format_tags_audio():
-    assert codecs.sniff_format(make_flac()) == "flac"
-    assert codecs.sniff_format(make_mp3()) == "mp3"
-    assert codecs.sniff_format(make_mp3(id3_bytes=64)) == "mp3"
+    assert mediacodecs.sniff_format(make_flac()) == "flac"
+    assert mediacodecs.sniff_format(make_mp3()) == "mp3"
+    assert mediacodecs.sniff_format(make_mp3(id3_bytes=64)) == "mp3"
     # jpeg's FF D8 FF E0 must NOT be taken for an mp3 sync
-    assert codecs.sniff_format(b"\xff\xd8\xff\xe0" + bytes(30)) == "jpeg"
+    assert mediacodecs.sniff_format(b"\xff\xd8\xff\xe0" + bytes(30)) == "jpeg"
 
 
 def test_spark_audio_info_mixed_formats(spark):
@@ -169,7 +169,7 @@ def test_spark_audio_info_mixed_formats(spark):
             ("m", bytearray(make_mp3(4))),
             ("x", bytearray(b"garbage"))]
     df = spark.createDataFrame(rows, "audio_id string, bytes binary")
-    from irivermetrics_spark.operators import multimodal
+    from irivermetrics_offpaper.operators import multimodal
 
     got = {r["audio_id"]: r for r in
            multimodal.with_audio_info(df).collect()}

@@ -6,7 +6,7 @@ path."""
 import numpy as np
 import pytest
 
-from irivermetrics_spark.operators import bloom
+from irivermetrics_offpaper.operators import bloom
 
 
 def _local_build(keys, m, k):

@@ -8,7 +8,7 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from irivermetrics_spark.operators import bpe
+from irivermetrics_offpaper.operators import bpe
 
 
 # ---------------------------------------------------------------------------

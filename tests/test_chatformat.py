@@ -7,7 +7,7 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
-from irivermetrics_spark.operators import chatformat as cf
+from irivermetrics_offpaper.operators import chatformat as cf
 
 
 def _py_reference(messages, template):

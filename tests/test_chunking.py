@@ -5,7 +5,7 @@ import re
 import pandas as pd
 import pytest
 
-from irivermetrics_spark.operators import textops
+from irivermetrics_offpaper.operators import textops
 
 
 def _ref(text, max_tokens, overlap):

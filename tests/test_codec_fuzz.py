@@ -9,10 +9,11 @@ import time
 import numpy as np
 import pytest
 
+from irivermetrics_offpaper import mediacodecs
+from irivermetrics_offpaper.kernels import (bmp, gif, jpeg, png, vp8, wav,
+                                            webp, webpanim)
 from irivermetrics_spark import codecs
-from irivermetrics_spark.kernels import (bmp, geotiff, gif, jpeg, lzw,
-                                          netcdf, png, vp8, wav, webp,
-                                          webpanim)
+from irivermetrics_spark.kernels import geotiff, lzw, netcdf
 
 # lossy-VP8 fuzz prefix: valid keyframe tag (first_part_size=64, so the
 # random tail is long enough to be "the partition"), start code, and
@@ -110,7 +111,7 @@ def test_vp8_max_dims_empty_body_fails_fast():
 
 
 def test_webp_max_dims_empty_body_fails_fast():
-    from irivermetrics_spark.kernels.webp import _BitWriter
+    from irivermetrics_offpaper.kernels.webp import _BitWriter
 
     bw = _BitWriter()
     bw.bits(16382, 14)
@@ -132,7 +133,7 @@ def test_webp_single_symbol_huge_dims_fast():
     a LEGAL constant image in ~30 bytes; the steady-state bulk path
     must decode it vectorized, not one 0-bit symbol at a time (the r5
     garbage-input slow path: 13 s before, ~0.15 s after)."""
-    from irivermetrics_spark.kernels.webp import _BitWriter
+    from irivermetrics_offpaper.kernels.webp import _BitWriter
 
     bw = _BitWriter()
     bw.bits(2047, 14)
@@ -184,8 +185,8 @@ def test_probe_never_raises_fuzz():
     for trial in range(600):
         prefix = prefixes[trial % len(prefixes)]
         tail = bytes(rng.getrandbits(8) for _ in range(rng.randrange(0, 64)))
-        out = codecs.probe_image_info(prefix + tail)
+        out = mediacodecs.probe_image_info(prefix + tail)
         assert set(out) == fields and isinstance(out["fmt_detail"], str)
     for short in (None, b"", b"\x00", codecs.MAGIC[:3]):
-        assert set(codecs.probe_image_info(short)) == fields
+        assert set(mediacodecs.probe_image_info(short)) == fields
     assert time.time() - t0 < 20  # header-only: never O(payload)

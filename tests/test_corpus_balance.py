@@ -7,7 +7,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from irivermetrics_spark.operators import textops
+from irivermetrics_offpaper.operators import textops
 
 
 @pytest.fixture(scope="module")

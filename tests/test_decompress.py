@@ -6,7 +6,7 @@ import zlib
 import pandas as pd
 import pytest
 
-from irivermetrics_spark.operators import textops
+from irivermetrics_offpaper.operators import textops
 
 
 def test_mixed_batch_decompresses(spark):

@@ -9,9 +9,10 @@ import struct
 import numpy as np
 import pytest
 
+from irivermetrics_offpaper import mediacodecs
 from irivermetrics_spark import codecs
-from irivermetrics_spark.kernels import exif as exifk
-from irivermetrics_spark.kernels import jpeg as jpegk
+from irivermetrics_offpaper.kernels import exif as exifk
+from irivermetrics_offpaper.kernels import jpeg as jpegk
 
 
 def test_writer_parser_round_trip():
@@ -106,7 +107,7 @@ def test_jpeg_splice_preserves_decode_and_probe():
     # the baseline decoder must skip the APP1 segment byte-identically
     assert np.array_equal(jpegk.decode_baseline(jpg), jpegk.decode_baseline(spliced))
     # the header-only probe still finds SOF after APP1
-    info = codecs.probe_image_info(spliced)
+    info = mediacodecs.probe_image_info(spliced)
     assert (info["width"], info["height"]) == (8, 8)
     assert exifk.parse_exif(spliced)["orientation"] == 6
     assert exifk.parse_exif(jpg) == {}
@@ -121,7 +122,7 @@ def test_with_exif_spark(spark):
     rows = [("a", bytearray(tagged)), ("b", bytearray(jpg)),
             ("c", bytearray(raw16)), ("d", None), ("e", b"garbage bytes")]
     df = spark.createDataFrame(rows, "image_id string, bytes binary")
-    from irivermetrics_spark.operators import multimodal
+    from irivermetrics_offpaper.operators import multimodal
 
     got = {r.image_id: r for r in multimodal.with_exif(df).collect()}
     assert got["a"].orientation == 8 and got["a"].make == "SynthCam"
@@ -133,7 +134,7 @@ def test_with_exif_spark(spark):
 
 
 def test_resize_orient_restores_upright(spark):
-    from irivermetrics_spark.operators import multimodal
+    from irivermetrics_offpaper.operators import multimodal
 
     rng = np.random.default_rng(3)
     upright = (rng.integers(0, 8, (1, 12, 16)) * 32).astype(np.uint8)
@@ -168,7 +169,7 @@ def test_with_exif_hostile_types_dead_letter(spark):
     evil = exifk.insert_exif_app1(jpg, evil_tiff)
     df = spark.createDataFrame([("e", bytearray(evil))],
                                "image_id string, bytes binary")
-    from irivermetrics_spark.operators import multimodal
+    from irivermetrics_offpaper.operators import multimodal
 
     row = multimodal.with_exif(df).collect()[0]
     assert row.orientation is None

@@ -10,8 +10,9 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from irivermetrics_offpaper import mediacodecs
 from irivermetrics_spark import codecs
-from irivermetrics_spark.kernels import bmp, gif
+from irivermetrics_offpaper.kernels import bmp, gif
 
 
 def _rgb(h, w, seed=0, colors=8):
@@ -189,7 +190,7 @@ def test_gif_property_roundtrip(h, w, colors, seed):
 # ---------- Spark routing ----------
 
 def test_spark_decode_path_for_gif_and_bmp(spark):
-    from irivermetrics_spark.operators import multimodal
+    from irivermetrics_offpaper.operators import multimodal
 
     a = _rgb(8, 10, seed=9, colors=6)
     rows = [("g", gif.encode_gif(a), "gif"), ("b", bmp.encode_bmp(a), "bmp")]
@@ -206,10 +207,10 @@ def test_spark_decode_path_for_gif_and_bmp(spark):
 def test_probe_counts_gif_frames():
     a = _rgb(6, 6, seed=11, colors=3)
     one = gif.encode_gif(a)
-    info = codecs.probe_image_info(one)
+    info = mediacodecs.probe_image_info(one)
     assert (info["fmt_detail"], info["n_frames"]) == ("gif", 1)
     # truncated tail: shape survives, frame count degrades to None
-    info2 = codecs.probe_image_info(one[:20])
+    info2 = mediacodecs.probe_image_info(one[:20])
     assert info2["width"] == 6 and info2["n_frames"] in (None, 0)
 
 
@@ -231,7 +232,7 @@ def test_lzw_end_code_width_bump_boundary():
 
 
 def test_frame_sample_routes_gif(spark):
-    from irivermetrics_spark.operators import multimodal
+    from irivermetrics_offpaper.operators import multimodal
 
     a = _rgb(6, 6, seed=12, colors=3)
     b_ = _rgb(6, 6, seed=13, colors=3)
@@ -367,8 +368,8 @@ def test_bmp_rle8_decodes():
     off = 14 + 40 + len(pal.tobytes())
     buf = (b"BM" + struct.pack("<IHHI", off + len(rle), 0, 0, off)
            + info + pal.tobytes() + rle)
-    from irivermetrics_spark import codecs as _codecs
-    assert _codecs.sniff_format(buf) == "bmp"
+    from irivermetrics_offpaper import mediacodecs
+    assert mediacodecs.sniff_format(buf) == "bmp"
     got = bmp.decode_bmp(buf)
     rgb = {0: [3, 2, 1], 1: [30, 20, 10], 2: [120, 110, 100]}
     # bottom stream row is the LAST raster row (bottom-up)
@@ -405,7 +406,7 @@ def test_gif_truncated_extension_and_offscreen_frame():
 
 
 def test_frame_sample_gif_quarantine_keeps_prefix(spark):
-    from irivermetrics_spark.operators import multimodal
+    from irivermetrics_offpaper.operators import multimodal
 
     pal = np.array([[0, 0, 0], [255, 0, 0]], dtype=np.uint8)
     head = _anim([], 3, 3, pal)[:-1]
@@ -445,13 +446,13 @@ def test_image_quality_normalizes_gif_bmp_to_8bit_peak(spark):
     """gif/bmp carry native 0-255 samples: the quality pass must use
     the 8-bit peak, not the engine's 20000-DN reflectance peak (found
     live: every signal of a gif row flattened to ~0)."""
-    from irivermetrics_spark.operators import multimodal
+    from irivermetrics_offpaper.operators import multimodal
 
     rng = np.random.default_rng(30)
     base = rng.integers(0, 180, (8, 12)).astype(np.float64)
     img = np.kron(base, np.ones((8, 8)))
     a = np.stack([img, img, img]).clip(0, 255).astype(np.uint16)
-    from irivermetrics_spark.kernels import png as pngk
+    from irivermetrics_offpaper.kernels import png as pngk
     rows = [("g", gif.encode_gif(a), "gif"),
             ("b", bmp.encode_bmp(a), "bmp"),
             ("p", pngk.encode_png(a.astype(np.uint8)), "png")]
@@ -474,7 +475,7 @@ def test_bmp_property_roundtrip(h, w, seed):
 
 
 def test_probe_wav_info_never_raises_fuzz():
-    from irivermetrics_spark.kernels import wav as wavk
+    from irivermetrics_offpaper.kernels import wav as wavk
 
     rng = np.random.default_rng(77)
     import time

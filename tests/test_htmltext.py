@@ -6,7 +6,7 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from irivermetrics_spark.operators import htmltext
+from irivermetrics_offpaper.operators import htmltext
 
 
 def text_of(html, **kw):

@@ -8,7 +8,7 @@ import struct
 
 import pytest
 
-from irivermetrics_spark.kernels import id3 as id3k
+from irivermetrics_offpaper.kernels import id3 as id3k
 
 
 def test_writer_parser_round_trip():
@@ -102,7 +102,7 @@ def test_fuzz_never_raises():
 def test_id3_size_matches_audioprobe_skip():
     """The id3_size the tag parser reports equals the skip the mp3
     probe computes — the two header walks agree on framing."""
-    from irivermetrics_spark.kernels import audioprobe
+    from irivermetrics_offpaper.kernels import audioprobe
 
     tag = id3k.build_id3v23(title="X", artist="Y")
     assert id3k.parse_id3(tag)["id3_size"] == audioprobe._id3v2_size(tag)
@@ -111,8 +111,8 @@ def test_id3_size_matches_audioprobe_skip():
 def test_with_audio_tags_spark(spark):
     import numpy as np
 
-    from irivermetrics_spark.kernels import wav
-    from irivermetrics_spark.operators import multimodal
+    from irivermetrics_offpaper.kernels import wav
+    from irivermetrics_offpaper.operators import multimodal
 
     tag = id3k.build_id3v23(title="Song", artist="Band", year="2010")
     mp3ish = tag + b"\xff\xfb\x90\x00" + bytes(400)

@@ -1,4 +1,4 @@
-"""Header-only image metadata probe (codecs.probe_image_info /
+"""Header-only image metadata probe (mediacodecs.probe_image_info /
 multimodal.with_image_info): shape truth vs each codec's own encoder,
 real libwebp-encoded VP8 fixtures, and the never-raise contract on
 truncated/foreign payloads."""
@@ -9,13 +9,15 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from irivermetrics_offpaper import mediacodecs
 from irivermetrics_spark import codecs
-from irivermetrics_spark.kernels import geotiff, jpeg, png, webp, webpanim
-from irivermetrics_spark.operators import multimodal
+from irivermetrics_spark.kernels import geotiff
+from irivermetrics_offpaper.kernels import jpeg, png, webp, webpanim
+from irivermetrics_offpaper.operators import multimodal
 
 
 def _probe(buf):
-    return codecs.probe_image_info(buf)
+    return mediacodecs.probe_image_info(buf)
 
 
 def test_probe_engine_formats():
@@ -111,14 +113,14 @@ def test_with_image_info_spark(spark):
 
 
 def test_probe_engine_video_container():
-    from irivermetrics_spark.operators import multimodal
+    from irivermetrics_offpaper.operators import multimodal
 
     frames = (np.arange(4 * 2 * 5 * 6).reshape(4, 2, 5, 6) % 100).astype(np.uint16)
     info = _probe(multimodal.encode_video(frames))
     assert info["fmt_detail"] == "irm-video" and not info["decodable"]
     assert (info["width"], info["height"], info["nbands"], info["n_frames"]) == (6, 5, 2, 4)
     # sniff_format stays blind to the container (videos must not image-decode)
-    assert codecs.sniff_format(multimodal.encode_video(frames)) == "unknown"
+    assert mediacodecs.sniff_format(multimodal.encode_video(frames)) == "unknown"
 
 
 def test_probe_palette_png_reports_decoded_bands():

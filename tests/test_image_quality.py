@@ -10,7 +10,7 @@ import pandas as pd
 import pytest
 
 from irivermetrics_spark import codecs
-from irivermetrics_spark.operators import multimodal
+from irivermetrics_offpaper.operators import multimodal
 
 PEAK = float(codecs.REFLECTANCE_MAX)
 

@@ -20,7 +20,7 @@ import os
 import numpy as np
 import pytest
 
-from irivermetrics_spark.kernels import jpeg
+from irivermetrics_offpaper.kernels import jpeg
 
 DATA = os.path.join(os.path.dirname(__file__), "data")
 
@@ -125,7 +125,7 @@ def test_jpeg_multimodal_bridge(spark):
     import pandas as pd
 
     from irivermetrics_spark import codecs
-    from irivermetrics_spark.operators import multimodal, similarity
+    from irivermetrics_offpaper.operators import multimodal, similarity
 
     rows = []
     for i in range(4):

@@ -7,7 +7,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from irivermetrics_spark.operators import langid_model as lm
+from irivermetrics_offpaper.operators import langid_model as lm
 
 # tiny function-word stocks per language (public common words) — the
 # synthetic generator draws word soup from them, so the char-trigram

@@ -7,7 +7,7 @@ import duckdb
 import pandas as pd
 import pytest
 
-from irivermetrics_spark.operators import textops
+from irivermetrics_offpaper.operators import textops
 
 TRIM = re.compile(r"^[ \t\f\x0b\r]+|[ \t\f\x0b\r]+$")
 

@@ -7,7 +7,7 @@ import pandas as pd
 import pytest
 
 from irivermetrics_spark import codecs
-from irivermetrics_spark.operators import multimodal
+from irivermetrics_offpaper.operators import multimodal
 
 
 def test_resize_block_mean_exact():
@@ -43,7 +43,7 @@ def test_external_codec_stub_raises():
 
 
 def test_decode_any_routes_jpeg():
-    from irivermetrics_spark.kernels import jpeg
+    from irivermetrics_offpaper.kernels import jpeg
 
     img = np.stack([np.full((16, 24), v, dtype=np.uint8) for v in (30, 120, 210)])
     out = multimodal._decode_any(jpeg.encode_baseline(img, 90), "jpeg")
@@ -81,7 +81,7 @@ def test_image_embedding_neardup_detects_reencodes(spark):
     import numpy as np
 
     from irivermetrics_spark import codecs, synth
-    from irivermetrics_spark.operators import multimodal, similarity
+    from irivermetrics_offpaper.operators import multimodal, similarity
     from irivermetrics_spark.plans import pipeline
 
     fx = synth.make_fixture(w=60, h=24, n_dates=6, n_sections=2, seed=13)
@@ -131,7 +131,7 @@ def test_ar_bucket_assignment(spark):
     """Aspect-ratio bucketing from probe dims: truth table, log-space
     nearest (1920x1080 is 16:9, 1000x1000 is 1:1, 640x1136 is 9:16),
     NULL/degenerate dims, and a pure-JVM plan."""
-    from irivermetrics_spark.operators import multimodal
+    from irivermetrics_offpaper.operators import multimodal
 
     rows = [(1, 1920, 1080), (2, 1000, 1000), (3, 640, 1136),
             (4, 800, 600), (5, 599, 800), (6, None, 100), (7, 100, 0)]

@@ -7,7 +7,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from irivermetrics_spark.operators import packing
+from irivermetrics_offpaper.operators import packing
 
 
 @pytest.fixture(scope="module")

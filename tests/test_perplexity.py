@@ -9,7 +9,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from irivermetrics_spark.operators import textops
+from irivermetrics_offpaper.operators import textops
 
 # ASCII-whitespace corpus: the Spark normalizer is (?U)\s+ (Unicode)
 # while RE2's \s is ASCII-only, so the cross-engine pin keeps to ASCII

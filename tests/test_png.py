@@ -8,7 +8,7 @@ import os
 import numpy as np
 import pytest
 
-from irivermetrics_spark.kernels import jpeg, png
+from irivermetrics_offpaper.kernels import jpeg, png
 
 DATA = os.path.join(os.path.dirname(__file__), "data")
 
@@ -106,7 +106,7 @@ def test_cross_codec_same_artwork_agreement():
 
 
 def test_decode_any_routes_png():
-    from irivermetrics_spark.operators import multimodal
+    from irivermetrics_offpaper.operators import multimodal
 
     arr = np.stack([np.full((10, 12), v, dtype=np.uint8) for v in (10, 100, 250)])
     out = multimodal._decode_any(png.encode_png(arr), "png")

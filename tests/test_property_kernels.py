@@ -353,7 +353,7 @@ def _webp_cases(draw):
 @settings(max_examples=80, deadline=None)
 @given(_webp_cases())
 def test_webp_roundtrip_property(case):
-    from irivermetrics_spark.kernels import webp
+    from irivermetrics_offpaper.kernels import webp
 
     planes, kw = case
     buf = webp.encode_vp8l(planes, **kw)
@@ -375,7 +375,7 @@ _anim_frames = st.integers(1, 4).flatmap(lambda n: st.tuples(
 @settings(max_examples=40, deadline=None)
 @given(_anim_frames, st.integers(0, 2**32 - 1))
 def test_webp_anim_property_roundtrip_and_composite(spec, seed):
-    from irivermetrics_spark.kernels import webpanim
+    from irivermetrics_offpaper.kernels import webpanim
 
     n, rects = spec
     rng = np.random.default_rng(seed)
@@ -415,7 +415,7 @@ _span_corpus = st.lists(
 def test_span_window_hashes_match_token_tuples(doc_lists, k):
     # hash equality must coincide EXACTLY with token-tuple equality on
     # this tiny-vocab corpus (dense repeats stress the rolling hash)
-    from irivermetrics_spark.operators import spandedup
+    from irivermetrics_offpaper.operators import spandedup
 
     wins = {}
     for i, toks in enumerate(doc_lists):

@@ -6,7 +6,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from irivermetrics_spark.operators import quality_model as qm
+from irivermetrics_offpaper.operators import quality_model as qm
 
 CLEAN_WORDS = ["research", "method", "result", "figure", "analysis",
                "model", "data", "section", "study", "evidence"]

@@ -9,8 +9,10 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from irivermetrics_offpaper import mediacodecs
 from irivermetrics_spark import codecs, synth
-from irivermetrics_spark.operators import decode, multimodal
+from irivermetrics_spark.operators import decode
+from irivermetrics_offpaper.operators import multimodal
 from irivermetrics_spark.plans import pipeline
 from irivermetrics_spark.streaming import ingest
 
@@ -23,9 +25,9 @@ def _lossy_vp8_bytes() -> bytes:
 
 
 def test_sniff_format_magic_bytes():
-    from irivermetrics_spark.kernels import webp
+    from irivermetrics_offpaper.kernels import webp
 
-    s = codecs.sniff_format
+    s = mediacodecs.sniff_format
     assert s(_lossy_vp8_bytes()) == "webp-vp8"
     planes = np.full((4, 4, 4), 9, dtype=np.uint8)
     planes[0] = 255
@@ -49,14 +51,14 @@ def test_sniff_format_magic_bytes():
     # decodability routing: both webp flavours in since r6 (kernels/vp8),
     # animations too (kernels/webpanim), gif/bmp since late r6 — audio
     # and garbage stay diverted
-    assert "webp-vp8l" in codecs.DECODABLE_DETAILS
-    assert "webp-vp8" in codecs.DECODABLE_DETAILS
-    assert "webp-vp8x" in codecs.DECODABLE_DETAILS
-    assert "webp-vp8x-anim" in codecs.DECODABLE_DETAILS
-    assert "gif" in codecs.DECODABLE_DETAILS
-    assert "bmp" in codecs.DECODABLE_DETAILS
-    assert "wav" not in codecs.DECODABLE_DETAILS
-    assert "unknown" not in codecs.DECODABLE_DETAILS
+    assert "webp-vp8l" in mediacodecs.DECODABLE_DETAILS
+    assert "webp-vp8" in mediacodecs.DECODABLE_DETAILS
+    assert "webp-vp8x" in mediacodecs.DECODABLE_DETAILS
+    assert "webp-vp8x-anim" in mediacodecs.DECODABLE_DETAILS
+    assert "gif" in mediacodecs.DECODABLE_DETAILS
+    assert "bmp" in mediacodecs.DECODABLE_DETAILS
+    assert "wav" not in mediacodecs.DECODABLE_DETAILS
+    assert "unknown" not in mediacodecs.DECODABLE_DETAILS
 
 
 def test_with_format_detail_column(spark):

@@ -8,7 +8,7 @@ from collections import Counter
 import pandas as pd
 import pytest
 
-from irivermetrics_spark.operators import textops
+from irivermetrics_offpaper.operators import textops
 
 
 def _py_dup_line_frac(text: str) -> float:

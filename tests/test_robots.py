@@ -7,7 +7,7 @@ import random
 import pandas as pd
 import pytest
 
-from irivermetrics_spark.operators import robots as rb
+from irivermetrics_offpaper.operators import robots as rb
 
 BODY = """
 # global rules

@@ -6,7 +6,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from irivermetrics_spark.functions import geometry
-from irivermetrics_spark.operators import dedup, knn, similarity
+from irivermetrics_spark.operators import knn
+from irivermetrics_offpaper.operators import dedup, similarity
 
 
 # ------------------------------------------------------------------ kNN
@@ -99,7 +100,7 @@ def test_lsh_ann_recall_vs_brute(spark):
 
 
 def test_pq_ann_recall_vs_brute(spark):
-    from irivermetrics_spark.operators import pq
+    from irivermetrics_offpaper.operators import pq
 
     rng = np.random.default_rng(14)
     centers = rng.standard_normal((6, 32))
@@ -121,7 +122,7 @@ def test_pq_ann_recall_vs_brute(spark):
 
 
 def test_pq_encode_shape_and_determinism(spark):
-    from irivermetrics_spark.operators import pq
+    from irivermetrics_offpaper.operators import pq
 
     rng = np.random.default_rng(15)
     vecs = rng.standard_normal((40, 16))
@@ -137,7 +138,7 @@ def test_pq_encode_shape_and_determinism(spark):
 
 
 def test_ivf_ann_recall_vs_brute(spark):
-    from irivermetrics_spark.operators import ivf
+    from irivermetrics_offpaper.operators import ivf
 
     rng = np.random.default_rng(12)
     centers = rng.standard_normal((6, 32))
@@ -162,7 +163,7 @@ def test_ivf_assigned_reuse_identical(spark):
     """ivf_topk(assigned=) must return exactly the direct-call result —
     the amortized index path (r2 VERDICT: re-running the assign UDF over
     the base table per query batch) is value-transparent."""
-    from irivermetrics_spark.operators import ivf
+    from irivermetrics_offpaper.operators import ivf
 
     rng = np.random.default_rng(21)
     vecs = rng.standard_normal((120, 16))
@@ -183,7 +184,7 @@ def test_ivf_assigned_reuse_identical(spark):
 def test_pq_encoded_reuse_and_broadcast_luts(spark):
     """pq_topk(encoded=) with the sc.broadcast LUT path must equal the
     fresh-encode call."""
-    from irivermetrics_spark.operators import pq
+    from irivermetrics_offpaper.operators import pq
 
     rng = np.random.default_rng(22)
     vecs = rng.standard_normal((100, 16))
@@ -210,7 +211,7 @@ def test_pq_large_query_batch_no_driver_collect(spark, monkeypatch):
     one allowed driver action is queries.count())."""
     from pyspark.sql import DataFrame
 
-    from irivermetrics_spark.operators import pq
+    from irivermetrics_offpaper.operators import pq
 
     rng = np.random.default_rng(31)
     vecs = rng.standard_normal((400, 8))
@@ -250,7 +251,7 @@ def test_ivf_pq_full_probe_equals_flat_pq(spark):
     are shared (_adc_luts/_block_scorer), its floats — must reproduce
     flat pq_topk exactly, which the ann_pq oracle already pins to the
     brute ranking."""
-    from irivermetrics_spark.operators import ivf, pq
+    from irivermetrics_offpaper.operators import ivf, pq
 
     rng = np.random.default_rng(33)
     centers = rng.standard_normal((5, 32))
@@ -273,7 +274,7 @@ def test_ivf_pq_recall_at_partial_probe(spark):
     """nprobe < n_lists on clustered data: the routed candidate set is a
     strict subset yet recall stays high — the operating point the
     composition exists for."""
-    from irivermetrics_spark.operators import ivf, pq
+    from irivermetrics_offpaper.operators import ivf, pq
 
     rng = np.random.default_rng(34)
     centers = rng.standard_normal((6, 32))
@@ -298,7 +299,7 @@ def test_ivf_pq_index_reuse_identical(spark):
     """ivf_pq_topk(index=) — the persisted-index path a 10^9-row
     deployment uses — is value-transparent vs the direct call, and the
     index is one row per vector with (list_id, m codes)."""
-    from irivermetrics_spark.operators import ivf, pq
+    from irivermetrics_offpaper.operators import ivf, pq
 
     rng = np.random.default_rng(35)
     vecs = rng.standard_normal((90, 16))
@@ -325,7 +326,7 @@ def test_ivf_pq_index_reuse_identical(spark):
 def test_ivf_pq_block_layout_invariant(spark):
     """enc_blocks / q_chunk must not change results (the lexsorted
     block-local cut argument, now composed with list routing)."""
-    from irivermetrics_spark.operators import ivf, pq
+    from irivermetrics_offpaper.operators import ivf, pq
 
     rng = np.random.default_rng(36)
     vecs = rng.standard_normal((80, 16))
@@ -346,8 +347,7 @@ def test_ivf_pq_block_layout_invariant(spark):
 
 
 def test_a9_stats_matches_pandas(spark):
-    """A9 (dev-scope mean/stddev threshold) — board entry retired in r6
-    for the ann_ivf_pq swap; semantics stay pinned here vs pandas."""
+    """A9 (dev-scope mean/stddev threshold) pinned against pandas."""
     import __spark_entry__ as entry
 
     got = entry._q_a9_stats(spark, "/root/testdata/sf0.001").toPandas()
@@ -359,10 +359,7 @@ def test_a9_stats_matches_pandas(spark):
 
 
 def test_haversine_retired_entry_still_matches_duckdb(spark):
-    """haversine_oracle was retired from the driver board in r6 (its
-    SQL lives verbatim inside the knn_pools oracle, which re-ranks by
-    it); the standalone entry stays pinned here against the retired
-    DuckDB SQL."""
+    """The haversine_oracle board entry against its oracle_sql() at sf0.001."""
     import duckdb
 
     import __spark_entry__ as entry
@@ -371,17 +368,14 @@ def test_haversine_retired_entry_still_matches_duckdb(spark):
     got = entry._q_haversine_oracle(spark, sf).toPandas()
     con = duckdb.connect()
     con.sql(f"create view events as select * from '{sf}/events.parquet'")
-    want = con.sql(entry.HAVERSINE_RETIRED_SQL).df()
+    want = con.sql(entry.oracle_sql()["haversine_oracle"]).df()
     assert int(got.n_pairs[0]) == int(want.n_pairs[0])
     for c in ("avg_dist_m", "max_dist_m", "min_dist_m"):
         assert np.isclose(got[c][0], want[c][0], atol=1e-4), c
 
 
 def test_pip_retired_entry_still_matches_duckdb(spark):
-    """pip_oracle was retired from the driver board in r6 (the same
-    crossing-number rule is hash-pinned with exact operand order
-    inside zonal_join_rows); the standalone entry stays pinned here
-    against the retired DuckDB SQL."""
+    """The pip_oracle board entry against its oracle_sql() at sf0.001."""
     import duckdb
 
     import __spark_entry__ as entry
@@ -390,7 +384,7 @@ def test_pip_retired_entry_still_matches_duckdb(spark):
     got = entry._q_pip_oracle(spark, sf).toPandas().sort_values("inside").reset_index(drop=True)
     con = duckdb.connect()
     con.sql(f"create view events as select * from '{sf}/events.parquet'")
-    want = con.sql(entry.PIP_RETIRED_SQL).df().sort_values("inside").reset_index(drop=True)
+    want = con.sql(entry.oracle_sql()["pip_oracle"]).df().sort_values("inside").reset_index(drop=True)
     assert got.inside.tolist() == want.inside.tolist()
     assert got.n_points.tolist() == want.n_points.tolist()
     assert np.allclose(got.sum_x.to_numpy(), want.sum_x.to_numpy(), atol=1e-4)
@@ -401,7 +395,7 @@ def test_ann_index_save_load_roundtrip_and_pruning(spark, tmp_path):
     the reloaded list_id-partitioned table is value-transparent through
     ivf_topk AND pq.ivf_pq_topk, and a list_id probe prunes partitions
     at the parquet scan (the on-disk nprobe/n_lists read saving)."""
-    from irivermetrics_spark.operators import ivf, pq
+    from irivermetrics_offpaper.operators import ivf, pq
 
     rng = np.random.default_rng(33)
     vecs = rng.standard_normal((150, 16))
@@ -443,9 +437,7 @@ def test_ann_index_save_load_roundtrip_and_pruning(spark, tmp_path):
 
 
 def test_u1_retired_entry_still_matches_duckdb(spark):
-    """u1_union was retired from the driver board in r6 (slot given to
-    c4_line_dedup); the union/distinct entry stays pinned here against
-    the retired DuckDB SQL."""
+    """The u1_union board entry against its oracle_sql() at sf0.001."""
     import duckdb
 
     import __spark_entry__ as entry
@@ -455,15 +447,14 @@ def test_u1_retired_entry_still_matches_duckdb(spark):
            .sort_values("c_nationkey").reset_index(drop=True))
     con = duckdb.connect()
     con.sql(f"create view customer as select * from '{sf}/customer.parquet'")
-    want = (con.sql(entry.U1_RETIRED_SQL).df()
+    want = (con.sql(entry.oracle_sql()["u1_union"]).df()
             .sort_values("c_nationkey").reset_index(drop=True))
     assert got.c_nationkey.tolist() == want.c_nationkey.tolist()
     assert got.n_selected.tolist() == want.n_selected.tolist()
 
 
 def test_a3_retired_entry_still_matches_duckdb(spark):
-    """a3_cond_sum was retired from the driver board in r7 (slot given
-    to bpe_tokens); the conditional-sum entry stays pinned here."""
+    """The a3_cond_sum board entry against its oracle_sql() at sf0.001."""
     import duckdb
 
     import __spark_entry__ as entry
@@ -473,26 +464,40 @@ def test_a3_retired_entry_still_matches_duckdb(spark):
            .sort_values("event_type").reset_index(drop=True))
     con = duckdb.connect()
     con.sql(f"create view events as select * from '{sf}/events.parquet'")
-    want = (con.sql(entry.A3_RETIRED_SQL).df()
+    want = (con.sql(entry.oracle_sql()["a3_cond_sum"]).df()
             .sort_values("event_type").reset_index(drop=True))
     assert got.event_type.tolist() == want.event_type.tolist()
     assert got.ra_sum.tolist() == want.ra_sum.tolist()
 
 
 def test_tokens_bpe_retired_entry_still_matches_duckdb(spark):
-    """text_tokens_bpe was retired from the driver board in r7
-    (superseded by the trained bpe_tokens); the segment-count stand-in
-    stays pinned here."""
+    """textops.bpe_like_token_count, the segment-count stand-in of the
+    text_tokens_bpe entry (retired from the driver board in r7, its
+    query built here), against DuckDB."""
     import duckdb
 
-    import __spark_entry__ as entry
+    from irivermetrics_offpaper.operators import textops
 
     sf = "/root/testdata/sf0.001"
-    got = (entry._q_text_tokens_bpe(spark, sf).toPandas()
+    d = spark.read.parquet(f"{sf}/documents.parquet")
+    n = textops.bpe_like_token_count(F.col("text"))
+    got = (d.groupBy("lang").agg(
+        F.sum(n).cast("bigint").alias("total_bpe_tokens"),
+        F.round(F.avg(n), 6).alias("avg_bpe_tokens")).toPandas()
            .sort_values("lang").reset_index(drop=True))
     con = duckdb.connect()
     con.sql(f"create view documents as select * from '{sf}/documents.parquet'")
-    want = (con.sql(entry.TOKENS_BPE_RETIRED_SQL).df()
+    want = (con.sql(r"""
+        WITH t AS (
+          SELECT lang,
+                 len(regexp_extract_all(text, '[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]|\s+')) AS n
+          FROM documents
+        )
+        SELECT lang,
+               CAST(SUM(n) AS BIGINT) AS total_bpe_tokens,
+               ROUND(AVG(n), 6) AS avg_bpe_tokens
+        FROM t GROUP BY lang
+    """).df()
             .sort_values("lang").reset_index(drop=True))
     assert got.lang.tolist() == want.lang.tolist()
     assert got.total_bpe_tokens.tolist() == want.total_bpe_tokens.tolist()
@@ -500,8 +505,7 @@ def test_tokens_bpe_retired_entry_still_matches_duckdb(spark):
 
 
 def test_a2_retired_entry_still_matches_duckdb(spark):
-    """a2_cond_avg was retired from the driver board in r7 (slot given
-    to html_text); the conditional-avg entry stays pinned here."""
+    """The a2_cond_avg board entry against its oracle_sql() at sf0.001."""
     import duckdb
 
     import __spark_entry__ as entry
@@ -511,15 +515,14 @@ def test_a2_retired_entry_still_matches_duckdb(spark):
            .sort_values("event_type").reset_index(drop=True))
     con = duckdb.connect()
     con.sql(f"create view events as select * from '{sf}/events.parquet'")
-    want = (con.sql(entry.A2_RETIRED_SQL).df()
+    want = (con.sql(entry.oracle_sql()["a2_cond_avg"]).df()
             .sort_values("event_type").reset_index(drop=True))
     assert got.event_type.tolist() == want.event_type.tolist()
     assert got.avg_above_50.tolist() == pytest.approx(want.avg_above_50.tolist())
 
 
 def test_o2_retired_entry_still_matches_duckdb(spark):
-    """o2_rank was retired from the driver board in r7 (slot given to
-    url_normalize); the dense-rank entry stays pinned here."""
+    """The o2_rank board entry against its oracle_sql() at sf0.001."""
     import duckdb
 
     import __spark_entry__ as entry
@@ -529,26 +532,50 @@ def test_o2_retired_entry_still_matches_duckdb(spark):
            .sort_values(["nationkey", "suppkey"]).reset_index(drop=True))
     con = duckdb.connect()
     con.sql(f"create view supplier as select * from '{sf}/supplier.parquet'")
-    want = (con.sql(entry.O2_RETIRED_SQL).df()
+    want = (con.sql(entry.oracle_sql()["o2_rank"]).df()
             .sort_values(["nationkey", "suppkey"]).reset_index(drop=True))
     assert got.suppkey.tolist() == want.suppkey.tolist()
     assert got.bal_rank.tolist() == want.bal_rank.tolist()
 
 
 def test_clusters_retired_entry_still_matches_duckdb(spark):
-    """dedup_clusters was retired from the driver board in r7 (slot
-    given to exif_probe; the resolver stays green via dedup_pipeline);
-    the chained-pair clustering entry stays pinned here."""
+    """dedup.cluster_duplicates on chained pairs, the dedup_clusters
+    entry (retired from the driver board in r7, its query built here),
+    against DuckDB: chain pairs (consecutive ids within each exact-dup
+    md5 group) must resolve to min-id clusters."""
     import duckdb
-
-    import __spark_entry__ as entry
+    from pyspark.sql import Window
 
     sf = "/root/testdata/sf0.001"
-    got = (entry._q_dedup_clusters(spark, sf).toPandas()
+    d = spark.read.parquet(f"{sf}/documents.parquet").select("doc_id", "text")
+    dup = d.filter(F.col("doc_id") % 17 == 0).withColumn("doc_id", F.col("doc_id") + 1000000)
+    u = d.unionByName(dup).withColumn("h", F.md5("text"))
+    w = Window.partitionBy("h").orderBy("doc_id")
+    pairs = (u.withColumn("prev", F.lag("doc_id").over(w))
+             .filter(F.col("prev").isNotNull())
+             .select(F.col("prev").alias("id_a"), F.col("doc_id").alias("id_b")))
+    got = (dedup.cluster_duplicates(pairs)
+           .select(F.col("id").cast("bigint").alias("id"),
+                   F.col("cluster").cast("bigint").alias("cluster")).toPandas()
            .sort_values("id").reset_index(drop=True))
     con = duckdb.connect()
     con.sql(f"create view documents as select * from '{sf}/documents.parquet'")
-    want = (con.sql(entry.CLUSTERS_RETIRED_SQL).df()
+    want = (con.sql("""
+        WITH u AS (
+          SELECT doc_id, text FROM documents
+          UNION ALL
+          SELECT doc_id + 1000000 AS doc_id, text FROM documents WHERE doc_id % 17 = 0
+        ), g AS (
+          SELECT doc_id, md5(text) AS h FROM u
+        ), c AS (
+          SELECT doc_id,
+                 MIN(doc_id) OVER (PARTITION BY h) AS cluster,
+                 COUNT(*) OVER (PARTITION BY h) AS n
+          FROM g
+        )
+        SELECT CAST(doc_id AS BIGINT) AS id, CAST(cluster AS BIGINT) AS cluster
+        FROM c WHERE n > 1
+    """).df()
             .sort_values("id").reset_index(drop=True))
     assert got.id.tolist() == want.id.tolist()
     assert got.cluster.tolist() == want.cluster.tolist()

@@ -7,7 +7,7 @@ import pandas as pd
 import pytest
 
 from irivermetrics_spark import codecs
-from irivermetrics_spark.operators import multimodal, semdedup
+from irivermetrics_offpaper.operators import multimodal, semdedup
 
 
 def _emb_frame(spark, planted_dups=((1, 101), (2, 102), (3, 103))):
@@ -109,7 +109,7 @@ def _artwork(seed: int = 0) -> np.ndarray:
 
 
 def _encode_variants(arr: np.ndarray) -> dict[str, tuple[bytes, str]]:
-    from irivermetrics_spark.kernels import jpeg, png, webp
+    from irivermetrics_offpaper.kernels import jpeg, png, webp
 
     argb = np.concatenate([np.full((1,) + arr.shape[1:], 255, np.uint8), arr])
     return {
@@ -179,7 +179,7 @@ def test_keep_canonical_string_ids_both_paths(spark):
     # without a long cast — keeper = lexicographic min per component,
     # on both the driver union-find and the forced distributed
     # min-label-propagation path (edge_limit=0)
-    from irivermetrics_spark.operators import dedup
+    from irivermetrics_offpaper.operators import dedup
 
     rows = [dict(image_id=f"a_{n}", bytes=b, fmt=f)
             for n, (b, f) in _encode_variants(_artwork(0)).items()]
@@ -199,7 +199,7 @@ def test_keep_canonical_string_ids_both_paths(spark):
 
 
 def test_cluster_duplicates_string_empty_pairs(spark):
-    from irivermetrics_spark.operators import dedup
+    from irivermetrics_offpaper.operators import dedup
 
     empty = spark.createDataFrame([], "id_a string, id_b string")
     assert dedup.cluster_duplicates(empty).count() == 0
@@ -209,7 +209,7 @@ def test_phash_incremental_equals_full_corpus(spark):
     """The incremental union contract on the image side: full-corpus
     pairs == old-batch pairs UNION incremental (new-vs-old + new-vs-new)
     pairs, with old images never re-decoded."""
-    from irivermetrics_spark.operators import dedup
+    from irivermetrics_offpaper.operators import dedup
 
     # two artwork families re-encoded across codecs, split old/new so
     # near-dup pairs straddle the batches
@@ -253,7 +253,7 @@ def test_hamming_incremental_bucket_cap(spark, caplog):
     WARNING; pairs through cold buckets survive."""
     import logging
 
-    from irivermetrics_spark.operators import dedup
+    from irivermetrics_offpaper.operators import dedup
 
     # 20 hashes identical (hot in every bucket) + 2 distinct neighbors
     rows = [(f"hot{i}", 0) for i in range(20)]
@@ -264,7 +264,7 @@ def test_hamming_incremental_bucket_cap(spark, caplog):
     dedup.hamming_candidates(old, "h64", "id", max_hamming=3,
                              persisted_out=per).collect()
     with caplog.at_level(logging.WARNING,
-                         logger="irivermetrics_spark.operators.dedup"):
+                         logger="irivermetrics_offpaper.operators.dedup"):
         pairs, nb = dedup.hamming_candidates_incremental(
             new, per[0], max_hamming=3, bucket_cap=8)
         got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}

@@ -5,7 +5,7 @@ import duckdb
 import pandas as pd
 import pytest
 
-from irivermetrics_spark.operators import sharding
+from irivermetrics_offpaper.operators import sharding
 
 
 @pytest.fixture()

@@ -7,7 +7,7 @@ import random
 
 import pytest
 
-from irivermetrics_spark.operators import sitemaps as sm
+from irivermetrics_offpaper.operators import sitemaps as sm
 
 URLSET = """<?xml version="1.0" encoding="UTF-8"?>
 <urlset xmlns="http://www.sitemaps.org/schemas/sitemap/0.9">
@@ -104,7 +104,7 @@ def test_coverage_gaps(spark):
             "</urlset>")
     entries = sm.parse_sitemaps_df(spark.createDataFrame(
         [("example.com", body.encode())], "host string, sitemap_xml binary"))
-    from irivermetrics_spark.operators import urlops
+    from irivermetrics_offpaper.operators import urlops
 
     urls = urlops.with_url_parts(spark.createDataFrame(
         [(1, "http://example.com/a"), (2, "http://example.com/other")],
@@ -149,7 +149,7 @@ def test_coverage_gaps_drops_unnormalizable_locs(spark):
             "<url><loc>https://ok.example/missing</loc></url></urlset>")
     entries = sm.parse_sitemaps_df(spark.createDataFrame(
         [("h", body.encode())], "host string, sitemap_xml binary"))
-    from irivermetrics_spark.operators import urlops
+    from irivermetrics_offpaper.operators import urlops
 
     urls = urlops.with_url_parts(spark.createDataFrame(
         [(1, "https://ok.example/present")], "doc_id bigint, url string"))

@@ -10,7 +10,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from irivermetrics_spark.operators import spandedup
+from irivermetrics_offpaper.operators import spandedup
 
 WORDS = ["alpha", "bravo", "charlie", "delta", "echo", "foxtrot", "golf",
          "hotel", "india", "juliet", "kilo", "lima"]

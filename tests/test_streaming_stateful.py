@@ -8,7 +8,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from irivermetrics_spark.streaming import stateful
+from irivermetrics_offpaper.streaming import stateful
 
 DOC_SCHEMA = T.StructType([
     T.StructField("doc_id", T.LongType(), False),
@@ -210,7 +210,7 @@ def test_stream_phash_neardup_cross_batch(spark):
 def test_popcount64_matches_python():
     import numpy as np
 
-    from irivermetrics_spark.operators.dedup import popcount64
+    from irivermetrics_offpaper.operators.dedup import popcount64
 
     rng = np.random.default_rng(3)
     vals = np.concatenate([

@@ -8,7 +8,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from irivermetrics_spark.operators import dedup, textops
+from irivermetrics_offpaper.operators import dedup, textops
 
 
 # ------------------------------------------------------- fingerprint
@@ -129,7 +129,7 @@ def test_simhash_hot_bucket_cap_logged(spark, caplog):
     rows += [(100, "another thing entirely about partitions " * 6),
              (101, "another thing entirely about partitions " * 6)]
     docs = spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "text"]))
-    with caplog.at_level(logging.WARNING, logger="irivermetrics_spark.operators.dedup"):
+    with caplog.at_level(logging.WARNING, logger="irivermetrics_offpaper.operators.dedup"):
         got = dedup.simhash_candidates(docs, max_hamming=3, bucket_cap=5).toPandas()
     pairs = set(zip(got.id_a, got.id_b))
     assert (100, 101) in pairs  # small bucket survives
@@ -173,7 +173,7 @@ def test_keep_canonical_drops_losers(spark):
 def test_neardup_finds_exact_copies_at_scale_defaults(spark):
     """Identical vectors collide in every SRP bucket regardless of
     bit-width, so the scale-safe defaults must still find exact dups."""
-    from irivermetrics_spark.operators import similarity
+    from irivermetrics_offpaper.operators import similarity
 
     rng = np.random.default_rng(5)
     vecs = rng.standard_normal((40, 16))
@@ -264,7 +264,7 @@ def test_langid_argmax_markers_and_ties(spark):
     # pins the argmax semantics after the text_langid_argmax board
     # entry retired (r6): highest marker density wins, ties break by
     # language-code order (alphabetical FIRST, not greatest()'s last)
-    from irivermetrics_spark.operators import textops
+    from irivermetrics_offpaper.operators import textops
 
     rows = [
         ("d_en", "we saw the cat and the dog of a friend in a park"),
@@ -284,7 +284,7 @@ def test_keep_canonical_rank_col_keeps_best(spark):
     non-duplicates pass through; default min-id path unchanged."""
     import pandas as pd
 
-    from irivermetrics_spark.operators import dedup
+    from irivermetrics_offpaper.operators import dedup
 
     docs = spark.createDataFrame(pd.DataFrame({
         "doc_id": ["a", "b", "c", "d", "e", "f"],
@@ -310,7 +310,7 @@ def test_keep_canonical_nan_rank_loses(spark):
     import numpy as np
     import pandas as pd
 
-    from irivermetrics_spark.operators import dedup
+    from irivermetrics_offpaper.operators import dedup
 
     docs = spark.createDataFrame(pd.DataFrame({
         "doc_id": ["a", "b"],

@@ -11,7 +11,7 @@ import duckdb
 import pandas as pd
 import pytest
 
-from irivermetrics_spark.operators import textops
+from irivermetrics_offpaper.operators import textops
 
 DOCS = [
     ("d01", "contact me at alice.smith+tag@example.co.uk or bob@sub.domain.org today"),

@@ -7,7 +7,7 @@ def test_compression_ratio_signal(spark):
     direct zlib computation."""
     import zlib
 
-    from irivermetrics_spark.operators import textops
+    from irivermetrics_offpaper.operators import textops
 
     import random as _r
     rng = _r.Random(5)

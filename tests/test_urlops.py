@@ -8,7 +8,7 @@ from urllib.parse import urlsplit
 import pytest
 from pyspark.sql import functions as F
 
-from irivermetrics_spark.operators import urlops
+from irivermetrics_offpaper.operators import urlops
 
 TRACK = re.compile(urlops.TRACKING_PARAM_RE)
 

@@ -17,8 +17,9 @@ import struct
 import numpy as np
 import pytest
 
+from irivermetrics_offpaper import mediacodecs
 from irivermetrics_spark import codecs
-from irivermetrics_spark.kernels import vp8, webp
+from irivermetrics_offpaper.kernels import vp8, webp
 
 DATA = os.path.join(os.path.dirname(__file__), "data")
 GOLD = np.load(os.path.join(DATA, "vp8_goldens.npz"))
@@ -90,7 +91,7 @@ def test_gray16_bridge_routes_both_webp_flavours():
 
 
 def test_decode_any_webp_dispatch():
-    from irivermetrics_spark.operators.multimodal import _decode_any
+    from irivermetrics_offpaper.operators.multimodal import _decode_any
 
     buf = open(os.path.join(DATA, "vp8_synth_q75.webp"), "rb").read()
     arr = _decode_any(buf, "webp")
@@ -123,7 +124,7 @@ def test_rejects_animation_and_empty_container():
             + b"ANIM" + (4).to_bytes(4, "little") + b"\x00" * 4)
     with pytest.raises(ValueError, match="animated"):
         vp8.decode_webp(anim)
-    assert codecs.sniff_format(
+    assert mediacodecs.sniff_format(
         b"RIFF\x00\x00\x00\x00WEBPVP8X\x0a\x00\x00\x00\x12") == "webp-vp8x-anim"
     empty = b"RIFF" + (4).to_bytes(4, "little") + b"WEBP"
     with pytest.raises(ValueError, match="no VP8"):
@@ -165,7 +166,7 @@ def test_raw_alpha_and_filters_roundtrip():
 
 
 def test_lossy_webp_flows_through_resize_operator(spark):
-    from irivermetrics_spark.operators import multimodal
+    from irivermetrics_offpaper.operators import multimodal
 
     buf = open(os.path.join(DATA, "vp8_synth_q75.webp"), "rb").read()
     df = spark.createDataFrame(

@@ -10,8 +10,8 @@ import zlib
 import pytest
 from pyspark.sql import functions as F
 
-from irivermetrics_spark.kernels import warc as warck
-from irivermetrics_spark.operators import warcingest
+from irivermetrics_offpaper.kernels import warc as warck
+from irivermetrics_offpaper.operators import warcingest
 
 CRLF = b"\r\n"
 
@@ -249,7 +249,7 @@ def test_read_warc_responses_decodes_charsets(spark, warc_dir):
 
 
 def test_warc_to_html_text_e2e(spark, warc_dir):
-    from irivermetrics_spark.operators import htmltext
+    from irivermetrics_offpaper.operators import htmltext
 
     pages = warcingest.read_warc_responses(spark, warc_dir).select(
         "target_uri", F.col("text").alias("html"))

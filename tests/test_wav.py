@@ -12,7 +12,7 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from irivermetrics_spark.kernels import wav
+from irivermetrics_offpaper.kernels import wav
 
 
 def _rt(samples, rate, bits=None):
@@ -178,7 +178,7 @@ def test_audio_features_on_wav_payloads(spark):
     16-bit and the same clip at 24-bit must produce the same normalized
     levels and a centroid at the tone frequency; half-silence clip
     reports silence_ratio ~0.5."""
-    from irivermetrics_spark.operators import multimodal
+    from irivermetrics_offpaper.operators import multimodal
 
     rate, n, f0 = 16000, 16000, 440
     t = np.arange(n) / rate
@@ -211,11 +211,11 @@ def test_audio_features_on_wav_payloads(spark):
 
 
 def test_sniff_format_tags_wav():
-    from irivermetrics_spark import codecs
+    from irivermetrics_offpaper import mediacodecs
 
     buf = wav.write_wav(np.zeros(4, dtype=np.int16), 8000)
-    assert codecs.sniff_format(buf) == "wav"
-    assert codecs.sniff_format(buf) not in codecs.DECODABLE_DETAILS
+    assert mediacodecs.sniff_format(buf) == "wav"
+    assert mediacodecs.sniff_format(buf) not in mediacodecs.DECODABLE_DETAILS
 
 
 def test_rejects_sub_byte_and_inconsistent_widths():
@@ -240,7 +240,7 @@ def test_audio_features_quarantine_diverts_bad_payloads(spark):
     """A mu-law-tagged RIFF/WAVE clip (tag=7, no codec) fails the job
     under on_error='raise' and is silently diverted under
     on_error='quarantine' — same contract as embed_images."""
-    from irivermetrics_spark.operators import multimodal
+    from irivermetrics_offpaper.operators import multimodal
 
     good = wav.write_wav(np.arange(64, dtype=np.int16), 8000)
     i = good.index(b"fmt ")
@@ -310,7 +310,7 @@ def test_resample_preserves_tone_frequency():
 def test_resample_through_wav_roundtrip_and_features(spark):
     """Resampled clip re-encoded as WAV reports the new rate and the
     same duration/tone through audio_features."""
-    from irivermetrics_spark.operators import multimodal
+    from irivermetrics_offpaper.operators import multimodal
 
     rate0, f0 = 8000, 200
     t = np.arange(8000) / rate0
@@ -325,7 +325,7 @@ def test_resample_through_wav_roundtrip_and_features(spark):
 
 
 def test_probe_wav_info_and_operator(spark):
-    from irivermetrics_spark.operators import multimodal
+    from irivermetrics_offpaper.operators import multimodal
 
     stereo = wav.write_wav(np.zeros((8000, 2), dtype=np.int16), 16000)
     i24 = wav.write_wav(np.zeros((100, 1), dtype=np.int32), 8000, bits=24)

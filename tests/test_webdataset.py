@@ -10,7 +10,7 @@ import tarfile
 import numpy as np
 import pytest
 
-from irivermetrics_spark.kernels import tar as tark
+from irivermetrics_offpaper.kernels import tar as tark
 
 
 def _stdlib_read(blob: bytes) -> list[tuple[str, bytes]]:
@@ -115,7 +115,7 @@ def test_fuzz_never_hangs_or_crashes_unexpectedly():
 
 
 def test_split_member_name():
-    from irivermetrics_spark.operators.webdataset import split_member_name
+    from irivermetrics_offpaper.operators.webdataset import split_member_name
 
     assert split_member_name("0001.jpg") == ("0001", "jpg")
     assert split_member_name("a/b/0001.seg.png") == ("a/b/0001", "seg.png")
@@ -126,7 +126,7 @@ def test_split_member_name():
 
 def _sample_frame(spark, n=12):
     from irivermetrics_spark import codecs
-    from irivermetrics_spark.kernels import jpeg as jpegk
+    from irivermetrics_offpaper.kernels import jpeg as jpegk
 
     rows = []
     for i in range(n):
@@ -138,7 +138,7 @@ def _sample_frame(spark, n=12):
 
 
 def test_webdataset_write_read_pivot_e2e(spark, tmp_path):
-    from irivermetrics_spark.operators import webdataset as wds
+    from irivermetrics_offpaper.operators import webdataset as wds
 
     df = _sample_frame(spark)
     out = str(tmp_path / "shards")
@@ -165,8 +165,8 @@ def test_webdataset_write_read_pivot_e2e(spark, tmp_path):
 
 
 def test_webdataset_deterministic_and_stable_membership(spark, tmp_path):
-    from irivermetrics_spark.operators import sharding
-    from irivermetrics_spark.operators import webdataset as wds
+    from irivermetrics_offpaper.operators import sharding
+    from irivermetrics_offpaper.operators import webdataset as wds
 
     df = _sample_frame(spark)
     a, b = str(tmp_path / "a"), str(tmp_path / "b")
@@ -189,7 +189,7 @@ def test_webdataset_deterministic_and_stable_membership(spark, tmp_path):
 
 
 def test_webdataset_dead_letter_and_validation(spark, tmp_path):
-    from irivermetrics_spark.operators import webdataset as wds
+    from irivermetrics_offpaper.operators import webdataset as wds
 
     df = _sample_frame(spark, n=4)
     out = str(tmp_path / "shards")
@@ -213,7 +213,7 @@ def test_webdataset_dead_letter_and_validation(spark, tmp_path):
 def test_dotted_keys_rejected(spark, tmp_path):
     """r7 review find: keys containing '.' would merge into one sample
     on read-back (first-dot split) — the writer must reject them."""
-    from irivermetrics_spark.operators import webdataset as wds
+    from irivermetrics_offpaper.operators import webdataset as wds
 
     df = spark.createDataFrame([("a.1", b"x"), ("a.2", b"y")],
                                "key string, jpg binary")
@@ -246,7 +246,7 @@ def test_stream_webdataset_exactly_once(spark, tmp_path):
     """Streaming shard ingest: files appearing across micro-batches are
     each parsed exactly once (FileStreamSource tracking), through the
     same kernel as the batch reader."""
-    from irivermetrics_spark.operators import webdataset as wds
+    from irivermetrics_offpaper.operators import webdataset as wds
 
     src = tmp_path / "shards"
     sink = str(tmp_path / "sink")
@@ -290,7 +290,7 @@ def test_stream_webdataset_ingests_old_mtimes(spark, tmp_path):
     os.utime(p_old, (past, past))
     (src / "new.tar").write_bytes(tark.write_tar([("new.txt", b"n")]))
 
-    from irivermetrics_spark.operators import webdataset as wds
+    from irivermetrics_offpaper.operators import webdataset as wds
 
     sink = str(tmp_path / "sink2")
     q = (wds.stream_webdataset(spark, str(src)).writeStream

@@ -11,7 +11,7 @@ color cache, meta prefix codes) — plus container/edge checks.
 import numpy as np
 import pytest
 
-from irivermetrics_spark.kernels import webp
+from irivermetrics_offpaper.kernels import webp
 
 
 def _rt(planes, **kw):
@@ -144,7 +144,7 @@ def test_cross_codec_real_artwork_through_webp():
     synthetic fixtures."""
     import os
 
-    from irivermetrics_spark.kernels import png
+    from irivermetrics_offpaper.kernels import png
 
     data = os.path.join(os.path.dirname(__file__), "data")
     rgba = png.decode_png(open(os.path.join(data, "conformance_pal.png"), "rb").read())

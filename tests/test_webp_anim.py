@@ -17,8 +17,9 @@ import struct
 import numpy as np
 import pytest
 
+from irivermetrics_offpaper import mediacodecs
 from irivermetrics_spark import codecs
-from irivermetrics_spark.kernels import vp8, webp, webpanim
+from irivermetrics_offpaper.kernels import vp8, webp, webpanim
 
 DATA = os.path.join(os.path.dirname(__file__), "data")
 rng = np.random.default_rng(20260817)
@@ -35,7 +36,7 @@ def test_full_canvas_overwrite_roundtrip_exact():
     frames = [_rand_frame(13, 21) for _ in range(4)]
     buf = webpanim.encode_webp_anim(frames, [40, 50, 60, 70],
                                     blend=[False] * 4, loop_count=3)
-    assert codecs.sniff_format(buf) == "webp-vp8x-anim"
+    assert mediacodecs.sniff_format(buf) == "webp-vp8x-anim"
     out, durs, info = webpanim.decode_webp_anim(buf)
     assert out.shape == (4, 4, 13, 21)
     assert durs == [40, 50, 60, 70]
@@ -184,13 +185,13 @@ def test_adversarial_headers_bounded():
 
 
 def test_anim_is_decodable_detail_now():
-    assert "webp-vp8x-anim" in codecs.DECODABLE_DETAILS
+    assert "webp-vp8x-anim" in mediacodecs.DECODABLE_DETAILS
 
 
 def test_frame_sample_animated_webp_spark(spark):
     import pandas as pd
 
-    from irivermetrics_spark.operators import multimodal
+    from irivermetrics_offpaper.operators import multimodal
 
     frames = [_rand_frame(6, 10) for _ in range(5)]
     buf = webpanim.encode_webp_anim(frames, [10] * 5, blend=[False] * 5)
@@ -216,7 +217,7 @@ def test_frame_sample_animated_webp_spark(spark):
 def test_resize_and_embed_accept_animations(spark):
     import pandas as pd
 
-    from irivermetrics_spark.operators import multimodal
+    from irivermetrics_offpaper.operators import multimodal
 
     frames = [_rand_frame(8, 12, opaque=True) for _ in range(3)]
     buf = webpanim.encode_webp_anim(frames, [10] * 3, blend=[False] * 3)

@@ -8,7 +8,7 @@ import zipfile
 
 import pytest
 
-from irivermetrics_spark.kernels import zipfmt
+from irivermetrics_offpaper.kernels import zipfmt
 
 MEMBERS = [
     ("0001.jpg", b"\xff\xd8 not really a jpeg \x00\x01"),
@@ -91,7 +91,7 @@ def test_fuzz_never_hangs():
 
 
 def test_read_zip_members_spark(spark, tmp_path):
-    from irivermetrics_spark.operators import archives
+    from irivermetrics_offpaper.operators import archives
 
     good = zipfmt.write_zip(MEMBERS)
     (tmp_path / "a.zip").write_bytes(good)

@@ -17,8 +17,6 @@ OUT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), 
 
 
 def main() -> None:
-    from pyspark.sql import functions as F
-
     import __spark_entry__ as entrymod
     from irivermetrics_spark.session import get_spark
 
@@ -27,37 +25,8 @@ def main() -> None:
     os.makedirs(OUT, exist_ok=True)
     spark = get_spark("plans_r08", master="local[4]", shuffle_partitions=8)
 
-    qs = dict(entrymod.queries())
-
-    def _bench_dedup_minhash(spark, sf_dir):
-        from irivermetrics_spark.operators import dedup
-
-        d = entrymod._t(spark, sf_dir, "documents")
-        cand = dedup.lsh_candidates(d, "doc_id", "text")
-        return dedup.exact_jaccard_pairs(d, cand).filter(F.col("jaccard") >= 0.5)
-
-    def _bench_c4_line_dedup(spark, sf_dir):
-        from irivermetrics_spark.operators import textops
-
-        d = entrymod._t(spark, sf_dir, "documents").select("doc_id", "text")
-        return textops.remove_repeated_lines(d, min_df=25)
-
-    def _bench_chunk_shard(spark, sf_dir):
-        from irivermetrics_spark.operators import sharding, textops
-
-        d = entrymod._t(spark, sf_dir, "documents").select("doc_id", "text")
-        chunks = textops.chunk_documents(d, max_tokens=128, overlap=16)
-        cid = F.concat_ws("#", "doc_id", "chunk_idx")
-        return sharding.shard_assignments(
-            chunks.withColumn("chunk_id", cid), n_shards=64, id_col="chunk_id")
-
-    qs["dedup_minhash"] = _bench_dedup_minhash
-    qs["c4_line_dedup_raw"] = _bench_c4_line_dedup
-    qs["chunk_shard"] = _bench_chunk_shard
-
-    names = ["j1_star", "a7_fold", "w2_topk", "j6_fill", "f6_validity",
-             "dedup_exact", "dedup_minhash", "ann_brute", "text_quality",
-             "c4_line_dedup_raw", "chunk_shard"]
+    qs = entrymod.queries()
+    names = ["j1_star", "a7_fold", "w2_topk", "j6_fill", "f6_validity"]
     for name in names:
         if only and name not in only:
             continue

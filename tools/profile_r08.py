@@ -15,7 +15,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-WHAT = set(sys.argv[2:]) or {"minhash", "relational", "flagship"}
+WHAT = set(sys.argv[2:]) or {"relational", "flagship"}
 
 
 def noop(df):
@@ -51,55 +51,10 @@ def main():
             yield pdf
     noop(spark.range(10000).repartition(32).mapInPandas(_warm_fn, "id long"))
 
-    if "minhash" in WHAT:
-        from irivermetrics_spark.operators import dedup
-        print("== dedup_minhash stage split ==", flush=True)
-        sc.setJobDescription("minhash: read+count")
-        d = timed("read documents (plan)", lambda: entrymod._t(spark, SF_DIR, "documents"))
-        timed("documents count", lambda: d.count())
-        t_all0 = time.time()
-        sc.setJobDescription("minhash: signatures+banded persist")
-        sig = dedup.minhash_signatures(d.select("doc_id", "text"), "text", 64, 5)
-        banded = dedup._banded(sig, "doc_id", 64, 16).persist()
-        timed("banded persist materialize (count)", lambda: banded.count())
-        sc.setJobDescription("minhash: banded self-join pairs")
-        lite = banded.select("band", "bucket", "id")
-        pairs_ids = (
-            lite.alias("l").join(lite.alias("r"), ["band", "bucket"])
-            .where(F.col("l.id") < F.col("r.id"))
-            .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
-            .dropDuplicates(["id_a", "id_b"]))
-        timed("self-join + dedup (noop)", lambda: noop(pairs_ids))
-        sig1 = banded.filter(F.col("band") == 0).select("id", "minhash")
-        cand = dedup._with_est_jaccard(pairs_ids, sig1, 64)
-        sc.setJobDescription("minhash: est-jaccard join-back")
-        timed("cand with est_jaccard (noop)", lambda: noop(cand))
-        cand_p = cand.persist()
-        cand_p.count()
-        sc.setJobDescription("minhash: exact jaccard (dict path)")
-        timed("exact_jaccard dict path on persisted cand (noop)",
-              lambda: noop(dedup.exact_jaccard_pairs(d, cand_p).filter(F.col("jaccard") >= 0.5)))
-        sc.setJobDescription("minhash: exact jaccard (jvm path)")
-        timed("exact_jaccard JVM path on persisted cand (noop)",
-              lambda: noop(dedup.exact_jaccard_pairs(d, cand_p, broadcast_shingles=False)
-                           .filter(F.col("jaccard") >= 0.5)))
-        print(f"  (stage-split total {time.time() - t_all0:.3f} s)")
-        banded.unpersist()
-        cand_p.unpersist()
-        # full bench shape, twice
-        def bench_shape():
-            dd = entrymod._t(spark, SF_DIR, "documents")
-            c = dedup.lsh_candidates(dd, "doc_id", "text")
-            noop(dedup.exact_jaccard_pairs(dd, c).filter(F.col("jaccard") >= 0.5))
-        sc.setJobDescription("minhash: full bench shape")
-        timed("bench shape run 1", bench_shape)
-        timed("bench shape run 2", bench_shape)
-
     if "relational" in WHAT:
         print("== relational: plan-build vs execute ==", flush=True)
-        qs = dict(entrymod.queries())
-        for name in ["j1_star", "a7_fold", "w2_topk", "j6_fill", "f6_validity",
-                     "dedup_exact", "ann_brute", "text_quality"]:
+        qs = entrymod.queries()
+        for name in ["j1_star", "a7_fold", "w2_topk", "j6_fill", "f6_validity"]:
             sc.setJobDescription(f"rel: {name}")
             t0 = time.time()
             df = qs[name](spark, SF_DIR)
@@ -112,22 +67,6 @@ def main():
             noop(df2)
             t_run2 = time.time() - t0
             print(f"  {name:20s} build {t_build:6.3f}  exec1 {t_run1:6.3f}  build+exec2 {t_run2:6.3f}", flush=True)
-
-    if "textops" in WHAT or "relational" in WHAT:
-        from irivermetrics_spark.operators import sharding, textops
-        print("== c4_line_dedup / chunk_shard ==", flush=True)
-        d = entrymod._t(spark, SF_DIR, "documents").select("doc_id", "text")
-        sc.setJobDescription("c4: line dedup")
-        timed("c4_line_dedup run1", lambda: noop(textops.remove_repeated_lines(d, min_df=25)))
-        timed("c4_line_dedup run2", lambda: noop(textops.remove_repeated_lines(d, min_df=25)))
-        def chunk_shape():
-            chunks = textops.chunk_documents(d, max_tokens=128, overlap=16)
-            cid = F.concat_ws("#", "doc_id", "chunk_idx")
-            noop(sharding.shard_assignments(
-                chunks.withColumn("chunk_id", cid), n_shards=64, id_col="chunk_id"))
-        sc.setJobDescription("chunk_shard")
-        timed("chunk_shard run1", chunk_shape)
-        timed("chunk_shard run2", chunk_shape)
 
     if "flagship" in WHAT:
         import tempfile
